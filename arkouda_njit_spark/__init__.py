@@ -8,11 +8,11 @@ map and file:line parity citations.
 """
 
 from .graph import DiGraph, Graph
-from .plans.checkpoints import install_flat_checkpoints
+from .plans.checkpoints import wrap_local_checkpoint
 from .session import get_spark
 
 # Engine-wide policy: every localCheckpoint drops inherited stats estimates
 # so iterative kernels can't compound them (plans/checkpoints.py docstring).
-install_flat_checkpoints()
+wrap_local_checkpoint()
 
 __all__ = ["Graph", "DiGraph", "get_spark"]

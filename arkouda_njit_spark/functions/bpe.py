@@ -28,8 +28,8 @@ Scale design — the whole point of BPE-on-a-cluster:
 * The merge application itself is a pure column expression (an index
   fold with ``F.aggregate``): left-to-right, non-overlapping — 'aaa'
   under merge (a,a) becomes [aa, a], exactly the serial semantics.
-* State tables are lineage-cut per round with
-  :func:`..plans.checkpoints.flat_checkpoint` (vocab-sized, cheap), so
+* State tables are lineage-cut per round with ``localCheckpoint``
+  (vocab-sized, cheap; stats-safe via :mod:`..plans.checkpoints`), so
   a 32k-merge training run does not grow a 32k-deep plan.
 
 Tokenization (:func:`bpe_encode` / :func:`bpe_token_count`) encodes the
@@ -61,7 +61,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..plans.checkpoints import flat_checkpoint
 from .text import tokens
 
 #: end-of-word marker (a separate trailing symbol, as in the original
@@ -202,17 +201,14 @@ def train_bpe(
     collect is the action that materializes them (the ``bfs.py``
     count-on-lazy-checkpoint pattern).
     """
-    words = flat_checkpoint(
-        word_frequencies(corpus, text_col).select(
-            _initial_symbols(F.col("word")).alias("syms"), F.col("freq")
-        ),
-        eager=False,
-    )
+    words = word_frequencies(corpus, text_col).select(
+        _initial_symbols(F.col("word")).alias("syms"), F.col("freq")
+    ).localCheckpoint(eager=False)
     # the unaffected ∪ new_affected union below CONCATENATES partitions —
     # without a narrow coalesce back to the base count, the words table
     # doubles its partition count every round (8 → 2^rounds·8 tasks/stage)
     npart = words.rdd.getNumPartitions()
-    pair_counts = flat_checkpoint(_pair_counts_of(words), eager=False)
+    pair_counts = _pair_counts_of(words).localCheckpoint(eager=False)
 
     merges: list[tuple[str, str]] = []
     for rnd in range(num_merges):
@@ -241,15 +237,16 @@ def train_bpe(
         delta = _pair_counts_of(affected).select(
             "a", "b", (-F.col("cnt")).alias("cnt")
         ).unionAll(_pair_counts_of(new_affected))
-        pair_counts = flat_checkpoint(
+        pair_counts = (
             pair_counts.unionAll(delta)
             .groupBy("a", "b")
             .agg(F.sum("cnt").alias("cnt"))
-            .filter(F.col("cnt") > 0),
-            eager=False,
-        )
-        words = flat_checkpoint(
-            unaffected.unionAll(new_affected).coalesce(npart), eager=False
+            .filter(F.col("cnt") > 0)
+        ).localCheckpoint(eager=False)
+        words = (
+            unaffected.unionAll(new_affected)
+            .coalesce(npart)
+            .localCheckpoint(eager=False)
         )
     return merges
 

@@ -21,7 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plans.checkpoints import flat_checkpoint
 from ..plans.partitioning import ensure_parallelism
 from .text import shingles, tokens
 
@@ -149,16 +148,16 @@ def ngram_jaccard_pairs(
         # ensure_parallelism: shingle generation + the distinct's map-side
         # partial aggregation are the scan-stage CPU cost; a single-split
         # documents table would serialize them on one core (guide §2.5).
-        # flat_checkpoint (eager), NOT persist: the shingle table feeds
+        # eager localCheckpoint, NOT persist: the shingle table feeds
         # three subtrees of ONE terminal action (sizes + both pair sides),
         # and an unmaterialized persist makes the concurrent scans race
         # and recompute the explode per consumer — measured ~3x the
         # one-pass cost in the r6 stage attribution.
-        ex = flat_checkpoint(
+        ex = (
             ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
             .select(F.col(id_col), F.explode(sh).alias("sh"))
             .distinct()
-        )
+        ).localCheckpoint(eager=True)
     sizes = ex.groupBy(id_col).agg(F.count("*").alias("sz"))
     if candidates is None:
         dfreq = ex.groupBy("sh").agg(F.count("*").alias("df"))
@@ -236,11 +235,11 @@ def minhash_near_duplicates(
     # same fallback the signatures used, so verify scores exactly the
     # shingle sets the signatures were computed from
     sh = F.when(F.size(sh) > 0, sh).otherwise(F.array(F.trim(F.col(text_col))))
-    ex = flat_checkpoint(
+    ex = (
         ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
         .select(F.col(id_col), F.explode(sh).alias("sh"))
         .distinct()
-    )
+    ).localCheckpoint(eager=True)
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("sh")))).alias(f"mh{i}")
         for i in range(num_hashes)
@@ -462,13 +461,13 @@ def dedup_clusters(
     from ..operators.connected_components import connected_components
 
     spark = pairs.sparkSession
-    edges = flat_checkpoint(
+    edges = (
         pairs.select(
             F.col(a_col).cast("long").alias("src"),
             F.col(b_col).cast("long").alias("dst"),
             F.lit(1.0).alias("weight"),
         )
-    )
+    ).localCheckpoint(eager=True)
     # Lineage cut before the iterative kernel: `pairs` usually arrives as
     # the whole LSH candidate pipeline, and without the checkpoint every
     # AQE re-plan inside the CC fixpoint re-canonicalizes that full tree

@@ -296,19 +296,18 @@ def embedding_near_duplicates(
 ) -> DataFrame:
     """(a, b, cosine) pairs with cosine >= threshold, bucketed self-join
     (embedding-cosine near-dup path of the dedup suite)."""
-    from ..plans.checkpoints import flat_checkpoint
     from ..plans.partitioning import ensure_parallelism
 
     # normalize + bucket ONCE (the self-join's two sides otherwise both
     # recompute the per-row vector math), spread a single-split corpus
     # across the cores first (guide §2.5)
-    c = flat_checkpoint(
+    c = (
         with_normalized(ensure_parallelism(corpus), vec_col).select(
             F.col(id_col),
             F.col("nvec"),
             _hyperplane_bucket(F.col("nvec"), dim, n_planes, seed).alias("bucket"),
         )
-    )
+    ).localCheckpoint(eager=True)
     left = c.select(F.col(id_col).alias("a"), F.col("nvec").alias("va"), "bucket")
     right = c.select(F.col(id_col).alias("b"), F.col("nvec").alias("vb"), "bucket")
     return (

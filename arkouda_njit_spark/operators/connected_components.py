@@ -26,14 +26,13 @@ from pyspark.sql import functions as F
 
 from ..graph import Graph
 from ..plans.iterate import FixpointLoop, count_changed
-from ..plans.joins import BROADCAST_MAX_VERTICES, state_join_side
+from ..plans.joins import BROADCAST_MAX_VERTICES
 
 
 def connected_components(
     graph: Graph,
     checkpoint_dir: str | None = None,
     max_iterations: int = 100,
-    collect_partition_metrics: bool = False,
 ) -> DataFrame:
     """Per-vertex component labels: DataFrame (vid, component).
 
@@ -41,18 +40,17 @@ def connected_components(
     (ConnectedComponents.chpl semantics).
     """
     P = graph.num_partitions
-    from ..plans.checkpoints import flat_checkpoint
 
     # Undirected semantics regardless of graph direction (reference treats
     # the graph as symmetric via the reversed arrays).
     #
-    # The per-kernel (src, dst) projection is flat_checkpointed: the loop
+    # The per-kernel (src, dst) projection is localCheckpointed: the loop
     # scans it every round and the canonical table's columnar-cache decode
     # was a measurable per-round cost (r6: 4.2 -> 3.2 s for sf0.1 CC with
     # the checkpointed projection; the one-time checkpoint pass amortizes
     # over the rounds). The canonical edge table itself stays persisted.
     if graph.directed:
-        edges = flat_checkpoint(
+        edges = (
             graph.edges.select("src", "dst")
             .unionAll(
                 graph.edges.select(
@@ -60,9 +58,9 @@ def connected_components(
                 )
             )
             .repartition(P, "src")
-        )
+        ).localCheckpoint(eager=True)
     else:
-        edges = flat_checkpoint(graph.edges.select("src", "dst"))
+        edges = graph.edges.select("src", "dst").localCheckpoint(eager=True)
 
     init = graph.vertices.select("vid", F.col("vid").alias("component"))
 
@@ -77,12 +75,7 @@ def connected_components(
         # on sf0.1 CC).
         nbr = (
             edges.join(
-                state_join_side(
-                    state.withColumnRenamed("vid", "src"),
-                    graph.n_vertices,
-                    strategy="shuffle_hash",
-                ),
-                "src",
+                state.withColumnRenamed("vid", "src").hint("shuffle_hash"), "src"
             )
             .select(F.col("dst").alias("vid"), "component")
         )
@@ -121,7 +114,6 @@ def connected_components(
         max_iterations=max_iterations,
         tol=0.0,
         checkpoint_dir=checkpoint_dir,
-        collect_partition_metrics=collect_partition_metrics,
     )
     return loop.run(init)
 

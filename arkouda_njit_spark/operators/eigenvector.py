@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.checkpoints import flat_checkpoint
 from ..plans.iterate import FixpointLoop
 
 
@@ -30,7 +29,6 @@ def eigenvector_centrality(
     tol: float = 1e-6,
     weighted: bool = False,
     checkpoint_dir: str | None = None,
-    collect_partition_metrics: bool = False,
 ) -> DataFrame:
     """(vid, eigenvector) per vertex, L2-normalized.
 
@@ -55,11 +53,11 @@ def eigenvector_centrality(
         # checkpointed before normalizing: the broadcast norm total and
         # the value projection would otherwise EACH re-execute the edge
         # join (2x per iteration instead of the inherent 1)
-        raw = flat_checkpoint(
+        raw = (
             state.join(contrib, "vid", "left").select(
                 "vid", (F.col("x") + F.coalesce("c", F.lit(0.0))).alias("x")
             )
-        )
+        ).localCheckpoint(eager=True)
         norm = F.broadcast(
             raw.agg(F.sqrt(F.sum(F.col("x") * F.col("x"))).alias("_n"))
         )
@@ -86,7 +84,6 @@ def eigenvector_centrality(
         max_iterations=max_iterations,
         tol=n * tol,
         checkpoint_dir=checkpoint_dir,
-        collect_partition_metrics=collect_partition_metrics,
     )
     result = loop.run(init)
     edges.unpersist()

@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import DiGraph
-from ..plans.checkpoints import flat_checkpoint
 from ..plans.iterate import FixpointLoop
 
 
@@ -30,7 +29,6 @@ def hits(
     max_iterations: int = 30,
     tol: float = 0.0,
     checkpoint_dir: str | None = None,
-    collect_partition_metrics: bool = False,
 ) -> DataFrame:
     """(vid, hub, auth) per vertex. ``tol > 0`` adds an L1-convergence job
     per iteration; ``tol <= 0`` runs exactly ``max_iterations`` alternating
@@ -64,22 +62,22 @@ def hits(
             .groupBy(F.col("dst").alias("vid"))
             .agg(F.sum("hub").alias("auth"))
         )
-        af = flat_checkpoint(
+        af = (
             verts.join(a_raw, "vid", "left").select(
                 "vid", F.coalesce("auth", F.lit(0.0)).alias("auth")
             )
-        )
+        ).localCheckpoint(eager=True)
         auth = _normalized(af, "auth")
         h_raw = (
             edges.join(auth.select(F.col("vid").alias("dst"), "auth"), "dst")
             .groupBy(F.col("src").alias("vid"))
             .agg(F.sum("auth").alias("hub"))
         )
-        hf = flat_checkpoint(
+        hf = (
             verts.join(h_raw, "vid", "left").select(
                 "vid", F.coalesce("hub", F.lit(0.0)).alias("hub")
             )
-        )
+        ).localCheckpoint(eager=True)
         hub = _normalized(hf, "hub")
         return hub.join(auth, "vid").select("vid", "hub", "auth")
 
@@ -101,7 +99,6 @@ def hits(
         max_iterations=max_iterations,
         tol=tol,
         checkpoint_dir=checkpoint_dir,
-        collect_partition_metrics=collect_partition_metrics,
     )
     result = loop.run(init)
     edges.unpersist()

@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.checkpoints import flat_checkpoint
 from ..plans.iterate import FixpointLoop
 
 
@@ -79,7 +78,7 @@ def katz_centrality(
         tol=float(n) * tol,
         checkpoint_dir=checkpoint_dir,
     )
-    x = flat_checkpoint(loop.run(init))
+    x = loop.run(init).localCheckpoint(eager=True)
     edges.unpersist()
     norm = F.broadcast(x.agg(F.sqrt(F.sum(F.col("x") * F.col("x"))).alias("_n")))
     return x.crossJoin(norm).select(

@@ -161,7 +161,6 @@ def _truss_state(
     k: int,
     max_rounds: int = 100,
     checkpoint_dir: str | None = None,
-    collect_partition_metrics: bool = False,
     big: bool = False,
     support_state: DataFrame | None = None,
     n_vertices: int | None = None,
@@ -266,7 +265,6 @@ def _truss_state(
         max_iterations=max_rounds,
         tol=0.0,
         checkpoint_dir=checkpoint_dir,
-        collect_partition_metrics=collect_partition_metrics,
     )
     if support_state is None:
         edges = _core_edges(edges, k - 1)
@@ -281,7 +279,6 @@ def _truss_edges(
     k: int,
     max_rounds: int = 100,
     checkpoint_dir: str | None = None,
-    collect_partition_metrics: bool = False,
     big: bool = False,
     n_vertices: int | None = None,
     n_edges: int | None = None,
@@ -289,8 +286,7 @@ def _truss_edges(
     """Surviving (u,v) edge set of the k-truss (support >= k-2 fixpoint)."""
     return _truss_state(
         edges, k, max_rounds=max_rounds, checkpoint_dir=checkpoint_dir,
-        collect_partition_metrics=collect_partition_metrics, big=big,
-        n_vertices=n_vertices, n_edges=n_edges,
+        big=big, n_vertices=n_vertices, n_edges=n_edges,
     ).select("u", "v")
 
 

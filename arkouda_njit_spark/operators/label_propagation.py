@@ -23,24 +23,21 @@ from pyspark.sql import functions as F
 
 from ..graph import Graph
 from ..plans.iterate import FixpointLoop, count_changed
-from ..plans.joins import state_join_side
 
 
 def label_propagation(
     graph: Graph,
     max_iterations: int = 20,
     checkpoint_dir: str | None = None,
-    collect_partition_metrics: bool = False,
 ) -> DataFrame:
     """Per-vertex community labels: DataFrame (vid, label)."""
     P = graph.num_partitions
-    from ..plans.checkpoints import flat_checkpoint
 
     # Per-kernel checkpointed (src, dst) projection — same rationale and
     # measurement as connected_components (r6: avoids the canonical
     # table's columnar-cache decode on every round).
     if graph.directed:
-        edges = flat_checkpoint(
+        edges = (
             graph.edges.select("src", "dst")
             .unionAll(
                 graph.edges.select(
@@ -48,9 +45,9 @@ def label_propagation(
                 )
             )
             .repartition(P, "src")
-        )
+        ).localCheckpoint(eager=True)
     else:
-        edges = flat_checkpoint(graph.edges.select("src", "dst"))
+        edges = graph.edges.select("src", "dst").localCheckpoint(eager=True)
 
     init = graph.vertices.select("vid", F.col("vid").alias("label"))
 
@@ -62,12 +59,7 @@ def label_propagation(
         # beats it) — no keep-label join in the loop.
         nbr_labels = (
             edges.join(
-                state_join_side(
-                    state.withColumnRenamed("vid", "src"),
-                    graph.n_vertices,
-                    strategy="shuffle_hash",
-                ),
-                "src",
+                state.withColumnRenamed("vid", "src").hint("shuffle_hash"), "src"
             )
             .select(F.col("dst").alias("vid"), "label", F.lit(1).alias("one"))
         )
@@ -92,6 +84,5 @@ def label_propagation(
         max_iterations=max_iterations,
         tol=0.0,
         checkpoint_dir=checkpoint_dir,
-        collect_partition_metrics=collect_partition_metrics,
     )
     return loop.run(init)

@@ -44,10 +44,10 @@ Synchronous parallel moves need two safeguards, both deterministic:
   doing the work. Two Spark jobs per sweep: the eager checkpoint of the
   new assignment, and the Q measurement.
 
-Per-sweep state is cut with :func:`..plans.checkpoints.flat_checkpoint`
-(plain ``localCheckpoint`` carries the pre-checkpoint plan's estimated
-size, which compounds multiplicatively across sweeps until the optimizer
-drowns in BigInteger stats arithmetic — see that module's docstring).
+Per-sweep state is cut with ``localCheckpoint``, which the package wraps
+(:mod:`..plans.checkpoints`) to drop the pre-checkpoint plan's estimated
+size; unwrapped, that estimate compounds multiplicatively across sweeps
+until the optimizer drowns in BigInteger stats arithmetic.
 
 Ties break to the smallest community id; no rand(), no partition-order
 dependence: results are identical across partition counts (pinned by
@@ -65,7 +65,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.checkpoints import flat_checkpoint
 from ..plans.joins import state_join_side
 
 
@@ -121,12 +120,12 @@ def _local_moving(
     consecutive sweeps fail to improve Q by > ``gain_tol``. Returns
     (assignment (vid, comm) — eagerly checkpointed —, n_communities,
     improved_over_singletons)."""
-    k = flat_checkpoint(
+    k = (
         edges.groupBy("src")
         .agg(F.sum("weight").alias("k"))
         .withColumnRenamed("src", "vid")
-    )
-    assign = flat_checkpoint(k.select("vid", F.col("vid").alias("comm")))
+    ).localCheckpoint(eager=True)
+    assign = k.select("vid", F.col("vid").alias("comm")).localCheckpoint(eager=True)
     best_q = _assignment_modularity(edges, assign, two_m, n_verts)
     singleton_q = best_q
     best_assign = assign
@@ -189,7 +188,7 @@ def _local_moving(
         # sweeps give every vertex one sweep in each direction, so a
         # patience of >= 4 can never starve the one move a vertex needs.
         eligible = F.pmod(F.xxhash64(F.col("vid")), F.lit(2)) == (sweep // 2) % 2
-        assign = flat_checkpoint(
+        assign = (
             scored.groupBy("vid", "comm")
             .agg(
                 F.max(
@@ -206,7 +205,7 @@ def _local_moving(
                 .otherwise(F.col("comm"))
                 .alias("comm"),
             )
-        )
+        ).localCheckpoint(eager=True)
         q = _assignment_modularity(edges, assign, two_m, n_verts)
         if q > best_q + gain_tol:
             best_q, best_assign, stale = q, assign, 0
@@ -227,7 +226,7 @@ def louvain_communities(
     """Per-vertex Louvain communities: DataFrame (vid, community), the
     community id being the minimum internal vid of its members (the same
     canonical-label convention as connected_components)."""
-    edges = flat_checkpoint(graph.edges.select("src", "dst", "weight"))
+    edges = graph.edges.select("src", "dst", "weight").localCheckpoint(eager=True)
     two_m = edges.agg(F.sum("weight")).collect()[0][0]
     mapping = graph.vertices.select("vid", F.col("vid").alias("comm"))
     if not two_m:
@@ -239,15 +238,15 @@ def louvain_communities(
         )
         if not improved or n_comm == n_level:
             break
-        mapping = flat_checkpoint(
+        mapping = (
             mapping.join(
                 assign.select(
                     F.col("vid").alias("comm"), F.col("comm").alias("_new")
                 ),
                 "comm",
             ).select("vid", F.col("_new").alias("comm"))
-        )
-        edges = flat_checkpoint(
+        ).localCheckpoint(eager=True)
+        edges = (
             edges.join(
                 state_join_side(
                     assign.select(F.col("vid").alias("src"), F.col("comm").alias("_cs")),
@@ -264,7 +263,7 @@ def louvain_communities(
             )
             .groupBy(F.col("_cs").alias("src"), F.col("_cd").alias("dst"))
             .agg(F.sum("weight").alias("weight"))
-        )
+        ).localCheckpoint(eager=True)
         n_level = n_comm
     # canonical labels: community id = min original member vid
     canon = mapping.groupBy("comm").agg(F.min("vid").alias("community"))

@@ -37,7 +37,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.checkpoints import flat_checkpoint
 
 
 def minimum_spanning_forest(graph: Graph, max_rounds: int = 64) -> DataFrame:
@@ -57,9 +56,9 @@ def minimum_spanning_forest(graph: Graph, max_rounds: int = 64) -> DataFrame:
         .groupBy("u", "v")
         .agg(F.min("weight").alias("weight"))
     )
-    e = flat_checkpoint(e)
+    e = e.localCheckpoint(eager=True)
 
-    comp = flat_checkpoint(graph.vertices.select("vid", F.col("vid").alias("comp")))
+    comp = graph.vertices.select("vid", F.col("vid").alias("comp")).localCheckpoint(eager=True)
     forest: DataFrame | None = None
 
     for _ in range(max_rounds):
@@ -83,9 +82,9 @@ def minimum_spanning_forest(graph: Graph, max_rounds: int = 64) -> DataFrame:
                 "v",
             ).select("comp", offer)
         )
-        chosen = flat_checkpoint(
+        chosen = (
             offers.groupBy("comp").agg(F.min("o").alias("o"))
-        )
+        ).localCheckpoint(eager=True)
         picked = chosen.select(
             F.col("o.u").alias("u"), F.col("o.v").alias("v"),
             F.col("o.weight").alias("weight"),
@@ -95,7 +94,7 @@ def minimum_spanning_forest(graph: Graph, max_rounds: int = 64) -> DataFrame:
             break
 
         forest = picked if forest is None else forest.unionAll(picked)
-        forest = flat_checkpoint(forest)
+        forest = forest.localCheckpoint(eager=True)
 
         # hook: comp -> other; break the 2-cycles at the smaller id
         parent = chosen.select(
@@ -113,7 +112,7 @@ def minimum_spanning_forest(graph: Graph, max_rounds: int = 64) -> DataFrame:
             .otherwise(F.col("parent"))
             .alias("parent"),
         )
-        parent = flat_checkpoint(parent)
+        parent = parent.localCheckpoint(eager=True)
 
         # pointer doubling to the root of each hook tree; the moved flag
         # rides through the checkpoint so each inner round is ONE join and
@@ -122,26 +121,26 @@ def minimum_spanning_forest(graph: Graph, max_rounds: int = 64) -> DataFrame:
             p2 = parent.select(
                 F.col("comp").alias("parent"), F.col("parent").alias("grand")
             )
-            jumped = flat_checkpoint(
+            jumped = (
                 parent.join(p2, "parent", "left").select(
                     "comp",
                     F.coalesce("grand", "parent").alias("parent"),
                     (F.col("grand").isNotNull() & (F.col("grand") != F.col("parent")))
                     .alias("_moved"),
                 )
-            )
+            ).localCheckpoint(eager=True)
             moved = jumped.filter("_moved").count()
             parent = jumped.select("comp", "parent")
             if moved == 0:
                 break
 
-        comp = flat_checkpoint(
+        comp = (
             comp.join(
                 parent.withColumnRenamed("comp", "c_key"),
                 comp["comp"] == F.col("c_key"),
                 "left",
             ).select("vid", F.coalesce("parent", "comp").alias("comp"))
-        )
+        ).localCheckpoint(eager=True)
     else:
         raise RuntimeError(
             f"minimum_spanning_forest did not converge in {max_rounds} rounds"

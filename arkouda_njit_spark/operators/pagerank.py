@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from ..graph import Graph
 from ..plans.iterate import FixpointLoop, l1_diff
-from ..plans.joins import state_join_side
 
 
 def prepare_pagerank(graph: Graph, weight: str | None = None):
@@ -45,20 +44,16 @@ def prepare_pagerank(graph: Graph, weight: str | None = None):
     # the former .repartition(P, "src") here was a full extra exchange of
     # the transition table for a layout it already had (guide §2.4).
     #
-    # flat_checkpoint, NOT persist: the table is scanned once per
+    # localCheckpoint, NOT persist: the table is scanned once per
     # iteration and the columnar-cache decode was the dominant
     # per-iteration cost — checkpointing the rows directly measured
     # 8.7 -> 4.3 s for 10 sf0.1 iterations with everything else unchanged
     # (r6). The derived per-call transition table is cheap to rebuild, so
     # the checkpoint's weaker fault-tolerance story is acceptable here
     # (the canonical edge table itself stays persisted).
-    from ..plans.checkpoints import flat_checkpoint
-
-    trans = flat_checkpoint(
-        edges.join(outw, "src").select(
-            "src", "dst", (F.col("w") / F.col("out_total")).alias("p")
-        )
-    )
+    trans = edges.join(outw, "src").select(
+        "src", "dst", (F.col("w") / F.col("out_total")).alias("p")
+    ).localCheckpoint(eager=True)
 
     # Dangling vertices (no out-edges). Undirected graphs never have any
     # (every vertex has an incident symmetric edge), so the per-iteration
@@ -79,7 +74,6 @@ def pagerank(
     max_iterations: int = 100,
     weight: str | None = None,
     checkpoint_dir: str | None = None,
-    collect_partition_metrics: bool = False,
     prepared=None,
     init_ranks: DataFrame | None = None,
 ) -> DataFrame:
@@ -99,9 +93,6 @@ def pagerank(
     if n == 0:
         return graph.vertices.select("vid", F.lit(0.0).alias("rank"))
 
-    owns_prepared = prepared is None
-    trans, dangling, has_dangling = prepared or prepare_pagerank(graph, weight)
-
     if init_ranks is not None:
         aligned = (
             graph.vertices.select("vid")
@@ -115,74 +106,10 @@ def pagerank(
     else:
         init = graph.vertices.select("vid", F.lit(1.0 / n).alias("rank"))
 
-    zeros = graph.vertices.select("vid", F.lit(0.0).alias("c"))
-
-    def step(state: DataFrame, i: int) -> DataFrame:
-        # State join strategy: shuffle_hash unconditionally. The state is
-        # co-partitioned with the transition table, so only the V-sized
-        # state side moves and each partition builds a tiny local hash
-        # map; the former small-graph broadcast dispatch paid a driver
-        # collect + broadcast build PER ITERATION and measured ~25-40%
-        # slower at sf0.1 (r6) — and broadcasting a 10^12-vertex state is
-        # impossible anyway. Vertices with no in-edges are handled by
-        # unioning zero-contributions into the SAME aggregation — no
-        # second join.
-        contribs = (
-            trans.join(
-                state_join_side(
-                    state.withColumnRenamed("vid", "src"), n, strategy="shuffle_hash"
-                ),
-                "src",
-            )
-            .select(F.col("dst").alias("vid"), (F.col("p") * F.col("rank")).alias("c"))
-            .unionAll(zeros)
-            .groupBy("vid")
-            .agg(F.sum("c").alias("c"))
-        )
-        if has_dangling:
-            # Dangling mass as an in-plan broadcast scalar (1-row crossJoin),
-            # NOT a per-iteration driver collect — one Spark job per
-            # iteration instead of two (the extra barrier dominates on
-            # small graphs and is pure overhead at any size).
-            mass = F.broadcast(
-                state.join(dangling, "vid", "left_semi").agg(
-                    F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
-                )
-            )
-            return contribs.crossJoin(mass).select(
-                "vid",
-                (
-                    F.lit((1.0 - alpha) / n)
-                    + F.lit(alpha) * F.col("_dm") / F.lit(float(n))
-                    + F.lit(alpha) * F.col("c")
-                ).alias("rank"),
-            )
-        base = (1.0 - alpha) / n
-        return contribs.select(
-            "vid", (F.lit(base) + F.lit(alpha) * F.col("c")).alias("rank")
-        )
-
-    # tol <= 0 selects fixed-iteration mode: no per-iteration convergence
-    # job (the bench/oracle path runs an exact number of power iterations);
-    # unroll=2 halves the materialization barriers there (plans/iterate.py).
-    loop = FixpointLoop(
-        "pagerank",
-        step,
-        convergence=l1_diff("vid", "rank") if tol > 0 else None,
-        max_iterations=max_iterations,
-        tol=n * tol,
-        checkpoint_dir=checkpoint_dir,
-        collect_partition_metrics=collect_partition_metrics,
-        # chaining two steps in one plan would evaluate the intermediate
-        # state twice when the dangling-mass aggregate consumes it too, so
-        # unroll only the dangling-free shape (the common undirected case)
-        unroll=1 if has_dangling else 2,
+    return _power_iteration(
+        "pagerank", graph, init, None, alpha, tol, max_iterations,
+        weight, checkpoint_dir, prepared,
     )
-    result = loop.run(init)
-    if owns_prepared:
-        trans.unpersist()
-        dangling.unpersist()
-    return result
 
 
 def personalized_pagerank(
@@ -224,62 +151,102 @@ def personalized_pagerank(
         tvec.unpersist()
         raise ValueError("personalization refers to labels not in the graph")
 
-    owns_prepared = prepared is None
-    trans, dangling, has_dangling = prepared or prepare_pagerank(graph, weight)
     init = graph.vertices.join(tvec, "vid", "left").select(
         "vid", F.coalesce("t", F.lit(0.0)).alias("rank")
     )
+    result = _power_iteration(
+        "personalized_pagerank", graph, init, tvec, alpha, tol, max_iterations,
+        weight, checkpoint_dir, prepared,
+    )
+    tvec.unpersist()
+    return result
+
+
+def _power_iteration(
+    name: str,
+    graph: Graph,
+    init: DataFrame,
+    teleport: DataFrame | None,
+    alpha: float,
+    tol: float,
+    max_iterations: int,
+    weight: str | None,
+    checkpoint_dir: str | None,
+    prepared,
+) -> DataFrame:
+    """The power iteration behind :func:`pagerank` and
+    :func:`personalized_pagerank`, from the (vid, rank) vector ``init``.
+
+    ``teleport`` is the restart distribution: ``None`` for uniform 1/n
+    (a literal in the update expression, no join), else a (vid, t) table
+    broadcast-joined onto each iteration's contributions. Both the
+    (1-alpha) restart mass and the dangling mass land on it."""
+    n = graph.n_vertices
+    owns_prepared = prepared is None
+    trans, dangling, has_dangling = prepared or prepare_pagerank(graph, weight)
     zeros = graph.vertices.select("vid", F.lit(0.0).alias("c"))
 
+    def share(mass):
+        """Per-vertex part of ``mass`` under the teleport distribution."""
+        return mass / F.lit(float(n)) if teleport is None else mass * F.col("t")
+
     def step(state: DataFrame, i: int) -> DataFrame:
+        # State join strategy: shuffle_hash unconditionally. The state is
+        # co-partitioned with the transition table, so only the V-sized
+        # state side moves and each partition builds a tiny local hash
+        # map; the former small-graph broadcast dispatch paid a driver
+        # collect + broadcast build PER ITERATION and measured ~25-40%
+        # slower at sf0.1 (r6) — and broadcasting a 10^12-vertex state is
+        # impossible anyway. Vertices with no in-edges are handled by
+        # unioning zero-contributions into the SAME aggregation — no
+        # second join.
         contribs = (
-            trans.join(
-                state_join_side(
-                    state.withColumnRenamed("vid", "src"), n, strategy="shuffle_hash"
-                ),
-                "src",
-            )
+            trans.join(state.withColumnRenamed("vid", "src").hint("shuffle_hash"), "src")
             .select(F.col("dst").alias("vid"), (F.col("p") * F.col("rank")).alias("c"))
             .unionAll(zeros)
             .groupBy("vid")
             .agg(F.sum("c").alias("c"))
         )
-        with_t = contribs.join(F.broadcast(tvec), "vid", "left").select(
-            "vid", "c", F.coalesce("t", F.lit(0.0)).alias("t")
-        )
+        if teleport is not None:
+            contribs = contribs.join(F.broadcast(teleport), "vid", "left").select(
+                "vid", "c", F.coalesce("t", F.lit(0.0)).alias("t")
+            )
+        jump = share(F.lit(1.0 - alpha))
         if has_dangling:
+            # Dangling mass as an in-plan broadcast scalar (1-row crossJoin),
+            # NOT a per-iteration driver collect — one Spark job per
+            # iteration instead of two (the extra barrier dominates on
+            # small graphs and is pure overhead at any size).
             mass = F.broadcast(
                 state.join(dangling, "vid", "left_semi").agg(
                     F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
                 )
             )
-            return with_t.crossJoin(mass).select(
-                "vid",
-                (
-                    F.lit(1.0 - alpha) * F.col("t")
-                    + F.lit(alpha) * F.col("_dm") * F.col("t")
-                    + F.lit(alpha) * F.col("c")
-                ).alias("rank"),
-            )
-        return with_t.select(
-            "vid",
-            (F.lit(1.0 - alpha) * F.col("t") + F.lit(alpha) * F.col("c")).alias("rank"),
+            contribs = contribs.crossJoin(mass)
+            jump = jump + share(F.lit(alpha) * F.col("_dm"))
+        return contribs.select(
+            "vid", (jump + F.lit(alpha) * F.col("c")).alias("rank")
         )
 
+    # tol <= 0 selects fixed-iteration mode: no per-iteration convergence
+    # job (the bench/oracle path runs an exact number of power iterations);
+    # unroll=2 halves the materialization barriers there (plans/iterate.py).
     loop = FixpointLoop(
-        "personalized_pagerank",
+        name,
         step,
         convergence=l1_diff("vid", "rank") if tol > 0 else None,
         max_iterations=max_iterations,
         tol=n * tol,
         checkpoint_dir=checkpoint_dir,
+        # chaining two steps in one plan would evaluate the intermediate
+        # state twice when the dangling-mass aggregate consumes it too, so
+        # unroll only the dangling-free shape (the common undirected case)
         unroll=1 if has_dangling else 2,
     )
     result = loop.run(init)
     if owns_prepared:
         trans.unpersist()
         dangling.unpersist()
-    tvec.unpersist()
     return result
 
 

@@ -72,7 +72,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.checkpoints import flat_checkpoint
 from ..plans.iterate import FixpointLoop, count_changed
 from ..plans.joins import state_join_side
 
@@ -87,7 +86,6 @@ def balanced_partition(
     move_fraction: float = 0.5,
     init: DataFrame | None = None,
     checkpoint_dir: str | None = None,
-    collect_partition_metrics: bool = False,
 ) -> DataFrame:
     """(vid, block) partition assignment, restreamed for ``max_passes``.
 
@@ -143,7 +141,7 @@ def balanced_partition(
     # build plan — pure driver planning cost that multiplies by pass count
     # on deep-lineage parents (e.g. a graph built from another graph's
     # edge table)
-    edges = flat_checkpoint(edges)
+    edges = edges.localCheckpoint(eager=True)
 
     if init is None:
         init = graph.vertices.select(
@@ -342,6 +340,5 @@ def balanced_partition(
         max_iterations=max_passes,
         tol=-1.0,
         checkpoint_dir=checkpoint_dir,
-        collect_partition_metrics=collect_partition_metrics,
     )
     return loop.run(init)

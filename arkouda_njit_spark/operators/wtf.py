@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import DiGraph
-from ..plans.checkpoints import flat_checkpoint
 from .pagerank import personalized_pagerank, ppr_montecarlo
 from .salsa import salsa
 
@@ -107,9 +106,9 @@ def who_to_follow(
     e_lbl = graph.edge_list().select(
         F.col("src_label").alias("src"), F.col("dst_label").alias("dst")
     )
-    proj = flat_checkpoint(
+    proj = (
         e_lbl.filter(F.col("src").isin(circle)).withColumn("weight", F.lit(1.0))
-    )
+    ).localCheckpoint(eager=True)
     # The checkpoint cuts the projection's lineage BEFORE the subgraph
     # build: without it every AQE re-plan inside the SALSA loop
     # re-canonicalizes the whole edge_list→vertices→edges tree of the

@@ -18,13 +18,14 @@ inside stats estimation (driver CPU pinned in
 level-2 sweeps growing 2.7x per sweep, and latent in every deep loop:
 BFS on high-diameter graphs doubles the digit count per level).
 
-:func:`flat_checkpoint` is the engine-wide fix: checkpoint, then rebuild
-the ``LogicalRDD`` leaf WITHOUT ``originStats``/``originConstraints`` so
-every iteration restarts from the honest "unknown size" default
+:func:`wrap_local_checkpoint` is the engine-wide fix: it wraps
+``DataFrame.localCheckpoint`` so the checkpointed ``LogicalRDD`` leaf is
+rebuilt WITHOUT ``originStats``/``originConstraints``, and every iteration
+restarts from the honest "unknown size" default
 (``spark.sql.defaultSizeInBytes``) instead of the previous iteration's
-inflated product. Join-strategy quality is unaffected for these kernels:
-the state side's strategy is pinned explicitly by
-:func:`..plans.joins.state_join_side`, not left to size estimates.
+inflated product. Kernels simply call ``localCheckpoint``. Join-strategy
+quality is unaffected for these kernels: the state side's strategy is
+pinned explicitly by a join hint, not left to size estimates.
 
 The rebuild touches JVM internals (`LogicalRDD`'s constructor via py4j),
 pinned by tests to the installed pyspark; if the internals ever move, the
@@ -41,18 +42,7 @@ _STRIP_BROKEN = False
 _INSTALLED = False
 
 
-def flat_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``localCheckpoint`` that also drops inherited stats estimates.
-
-    Drop-in replacement for ``DataFrame.localCheckpoint`` inside iterative
-    kernels. Same semantics (lineage cut at a materialized-on-first-use or
-    eager ``LogicalRDD``); the leaf's statistics are reset to the default
-    instead of carrying the pre-checkpoint plan's join-size product.
-    """
-    return _stripped(df.localCheckpoint(eager=eager))
-
-
-def install_flat_checkpoints() -> None:
+def wrap_local_checkpoint() -> None:
     """Make every ``DataFrame.localCheckpoint`` in the process stats-safe.
 
     The engine's kernels checkpoint per iteration in ~70 places (fixpoint
@@ -65,7 +55,7 @@ def install_flat_checkpoints() -> None:
     reset, and AQE still re-plans from real runtime sizes at shuffle
     boundaries. Connect-mode DataFrames are untouched (no local JVM plan).
     Idempotent; falls back to the unwrapped behavior if Spark's internals
-    move (same guard as :func:`flat_checkpoint`).
+    move.
     """
     global _INSTALLED
     if _INSTALLED:

@@ -15,12 +15,15 @@ never grows (without truncation the plan doubles per iteration and the
 driver dies by iteration ~30).
 
 North-rule requirements handled here:
-  * **per-iteration, per-partition metrics** — row counts per partition plus
-    wall time and the change metric, persisted as JSON next to the epochs.
-  * **resumability** — with ``checkpoint_dir`` set, every ``epoch_interval``
-    iterations the state is written to ``<dir>/epoch=<i>`` (parquet; atomic
-    via the _SUCCESS marker). ``run`` restarts from the latest complete
-    epoch, so a killed job resumes mid-algorithm.
+  * **per-iteration, per-partition metrics** — wall time and the change
+    metric per iteration; every durable epoch also records the state's row
+    count per partition. Persisted as ``metrics.json`` next to the epochs.
+    In-memory runs (no ``checkpoint_dir``) run no metric jobs at all.
+  * **resumability** — with ``checkpoint_dir`` set, every
+    :data:`EPOCH_INTERVAL` iterations and after the last one the state is
+    written to ``<dir>/epoch=<i>`` (parquet; atomic via the _SUCCESS
+    marker), ``i`` being the last completed iteration. ``run`` restarts
+    from the latest complete epoch, so a killed job resumes mid-algorithm.
 """
 
 from __future__ import annotations
@@ -28,11 +31,14 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# durable runs write an epoch every this many iterations
+EPOCH_INTERVAL = 5
 
 
 @dataclass
@@ -40,17 +46,8 @@ class IterationMetrics:
     iteration: int
     wall_sec: float
     changed: float
-    rows: int
+    # state rows per partition; recorded for the iterations written as epochs
     partition_rows: dict[int, int] = field(default_factory=dict)
-
-    def to_dict(self) -> dict:
-        return {
-            "iteration": self.iteration,
-            "wall_sec": self.wall_sec,
-            "changed": self.changed,
-            "rows": self.rows,
-            "partition_rows": self.partition_rows,
-        }
 
 
 def count_changed(key: str, col: str) -> Callable[[DataFrame, DataFrame], float]:
@@ -94,15 +91,11 @@ class FixpointLoop:
         max_iterations: int = 200,
         tol: float = 0.0,
         checkpoint_dir: str | None = None,
-        epoch_interval: int = 5,
-        collect_partition_metrics: bool = False,
-        count_rows: bool = False,
         unroll: int = 1,
     ):
         """``convergence=None`` runs exactly ``max_iterations`` steps with no
         per-iteration convergence job (fixed-iteration mode — e.g. unrolled
-        PageRank); ``count_rows`` adds a per-iteration state row count to the
-        metrics (one extra tiny job).
+        PageRank).
 
         ``unroll`` (fixed-iteration mode only, and only without a
         ``checkpoint_dir`` so durable epoch numbering stays per-step):
@@ -121,16 +114,15 @@ class FixpointLoop:
         self.max_iterations = max_iterations
         self.tol = tol
         self.checkpoint_dir = checkpoint_dir
-        self.epoch_interval = epoch_interval
-        self.collect_partition_metrics = collect_partition_metrics
-        self.count_rows = count_rows
         self.unroll = max(1, unroll)
         self.metrics: list[IterationMetrics] = []
-        self.iterations_run = 0
 
     # -- durable epochs ----------------------------------------------------
     def _epoch_path(self, i: int) -> str:
         return os.path.join(self.checkpoint_dir, f"epoch={i}")
+
+    def _metrics_path(self) -> str:
+        return os.path.join(self.checkpoint_dir, "metrics.json")
 
     def latest_epoch(self) -> int | None:
         if not self.checkpoint_dir or not os.path.isdir(self.checkpoint_dir):
@@ -144,51 +136,42 @@ class FixpointLoop:
         return best
 
     def _write_epoch(self, state: DataFrame, i: int) -> None:
+        """Persist the state after iteration ``i`` (whose metrics entry is
+        the latest) together with its per-partition row counts."""
+        rows = state.groupBy(F.spark_partition_id().alias("pid")).count().collect()
+        self.metrics[-1].partition_rows = {r["pid"]: r["count"] for r in rows}
         state.write.mode("overwrite").parquet(self._epoch_path(i))
-        with open(os.path.join(self.checkpoint_dir, "metrics.json"), "w") as f:
-            json.dump([m.to_dict() for m in self.metrics], f)
+        with open(self._metrics_path(), "w") as f:
+            json.dump([asdict(m) for m in self.metrics], f)
 
-    def metrics_to_csv(self, path: str) -> None:
-        """Per-iteration (and per-partition, when collected) metrics as CSV —
-        the reference's comm-diagnostics sink (Utils.chpl:747-799)."""
-        with open(path, "w") as f:
-            f.write("iteration,wall_sec,changed,rows,partition,partition_rows\n")
-            for m in self.metrics:
-                if m.partition_rows:
-                    for pid, rows in sorted(m.partition_rows.items()):
-                        f.write(
-                            f"{m.iteration},{m.wall_sec:.4f},{m.changed},{m.rows},{pid},{rows}\n"
-                        )
-                else:
-                    f.write(f"{m.iteration},{m.wall_sec:.4f},{m.changed},{m.rows},,\n")
+    def _load_metrics(self) -> None:
+        """Reload pre-crash metrics so the next epoch write doesn't clobber
+        them (``self.metrics`` starts empty in a new process)."""
+        if not os.path.exists(self._metrics_path()):
+            return
+        with open(self._metrics_path()) as f:
+            self.metrics = [
+                IterationMetrics(
+                    iteration=m["iteration"],
+                    wall_sec=m["wall_sec"],
+                    changed=m["changed"],
+                    partition_rows={
+                        int(k): v for k, v in m.get("partition_rows", {}).items()
+                    },
+                )
+                for m in json.load(f)
+            ]
 
     # -- main loop ---------------------------------------------------------
-    def run(self, state: DataFrame, resume: bool = True) -> DataFrame:
-        spark = state.sparkSession
+    def run(self, state: DataFrame) -> DataFrame:
         start_iter = 0
-        if resume and self.checkpoint_dir:
-            last = self.latest_epoch()
-            if last is not None:
-                state = spark.read.parquet(self._epoch_path(last))
-                start_iter = last + 1
-                # reload pre-crash metrics so the next epoch write doesn't
-                # clobber them (self.metrics starts empty in a new process)
-                mpath = os.path.join(self.checkpoint_dir, "metrics.json")
-                if not self.metrics and os.path.exists(mpath):
-                    with open(mpath) as f:
-                        self.metrics = [
-                            IterationMetrics(
-                                iteration=m["iteration"],
-                                wall_sec=m["wall_sec"],
-                                changed=m["changed"],
-                                rows=m["rows"],
-                                partition_rows={
-                                    int(k): v
-                                    for k, v in m.get("partition_rows", {}).items()
-                                },
-                            )
-                            for m in json.load(f)
-                        ]
+        last = self.latest_epoch()
+        if last is not None:
+            state = state.sparkSession.read.parquet(self._epoch_path(last))
+            start_iter = last + 1
+            self._load_metrics()
+        # the last completed iteration whose state is already on disk
+        written = start_iter - 1
 
         state = state.localCheckpoint(eager=True)
         # unroll only applies when there is no per-iteration convergence
@@ -209,30 +192,23 @@ class FixpointLoop:
                 nxt = self.step(nxt, i + j)
             nxt = nxt.localCheckpoint(eager=True)
             changed = self.convergence(state, nxt) if self.convergence else -1.0
-            wall = time.time() - t0
-
-            m = IterationMetrics(
-                iteration=i + k - 1,
-                wall_sec=wall,
-                changed=changed,
-                rows=nxt.count() if self.count_rows else -1,
+            self.metrics.append(
+                IterationMetrics(
+                    iteration=i + k - 1, wall_sec=time.time() - t0, changed=changed
+                )
             )
-            if self.collect_partition_metrics:
-                rows = nxt.groupBy(F.spark_partition_id().alias("pid")).count().collect()
-                m.partition_rows = {r["pid"]: r["count"] for r in rows}
-            self.metrics.append(m)
 
             state.unpersist()
             state = nxt
             i += k
-            self.iterations_run = i - start_iter
 
-            if self.checkpoint_dir and ((i - 1) % self.epoch_interval == 0):
+            if self.checkpoint_dir and (i - 1) % EPOCH_INTERVAL == 0:
                 self._write_epoch(state, i - 1)
+                written = i - 1
 
             if self.convergence and changed <= self.tol:
                 break
 
-        if self.checkpoint_dir:
-            self._write_epoch(state, self.max_iterations)
+        if self.checkpoint_dir and written != i - 1:
+            self._write_epoch(state, i - 1)
         return state

@@ -14,6 +14,11 @@ kernels, dispatched on ``numLocales == 1`` — BreadthFirstSearchMsg.chpl:
 87-99); we dispatch on vertex count. AQE would make the same call from
 runtime sizes, but an explicit threshold keeps the decision deterministic
 and testable.
+
+PageRank, connected components and label propagation skip the dispatch and
+hint ``shuffle_hash`` directly: their state is co-partitioned with a
+checkpointed edge table, and a per-iteration broadcast measured slower
+even on small graphs.
 """
 
 from __future__ import annotations
@@ -25,12 +30,9 @@ from pyspark.sql import DataFrame
 BROADCAST_MAX_VERTICES = 2_000_000
 
 
-def state_join_side(state: DataFrame, n_vertices: int, strategy: str = "auto") -> DataFrame:
-    """Return the state DataFrame with the right join hint applied."""
-    if strategy not in ("auto", "broadcast", "shuffle_hash"):
-        raise ValueError(f"unknown join strategy: {strategy!r}")
-    if strategy == "auto":
-        strategy = "broadcast" if n_vertices <= BROADCAST_MAX_VERTICES else "shuffle_hash"
-    if strategy == "broadcast":
+def state_join_side(state: DataFrame, n_vertices: int) -> DataFrame:
+    """Return the state DataFrame hinted for its size: broadcast up to
+    :data:`BROADCAST_MAX_VERTICES` vertices, shuffle_hash beyond."""
+    if n_vertices <= BROADCAST_MAX_VERTICES:
         return state.hint("broadcast")
     return state.hint("shuffle_hash")

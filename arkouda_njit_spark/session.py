@@ -22,6 +22,25 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_PARTITIONS = 32
+MAX_DRIVER_MEMORY_MB = 48 * 1024
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` default: the smaller of 48g and half of
+    physical RAM.
+
+    Local-mode executors share the driver JVM heap: 8g starved the
+    32-thread shuffle/persist working set at sf0.1 (measured ~10% slower
+    end-to-end than 48g on an idle host). -Xmx is a cap, not a
+    reservation, but a cap above the machine's RAM lets the heap grow
+    until the kernel OOM-kills the JVM (seen at ~15 GB RSS on a 16 GB
+    host), so the cap leaves the other half to Python workers and the OS.
+    """
+    try:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (AttributeError, OSError, ValueError):  # no sysconf (non-POSIX)
+        return f"{MAX_DRIVER_MEMORY_MB}m"
+    return f"{min(MAX_DRIVER_MEMORY_MB, ram_mb // 2)}m"
 
 
 def get_spark(
@@ -51,11 +70,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # local-mode executors share the driver JVM heap: 8g starved the
-        # 32-thread shuffle/persist working set at sf0.1 (measured ~10%
-        # slower end-to-end than 48g on an idle host; -Xmx is a cap, not a
-        # reservation, so the higher default costs idle sessions nothing)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

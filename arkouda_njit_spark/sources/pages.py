@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..graph import DiGraph
-from ..plans.checkpoints import flat_checkpoint
 from ..plans.partitioning import dense_rank_ids, dense_rank_ids_counted
 
 TWO63 = float(2**63)
@@ -294,7 +293,7 @@ def _string_keyed_digraph(
     html — without the checkpoint each consumer re-ran that Python pass
     (measured as the dominant cost of the downstream pagerank's prepare
     step, which happened to trigger the first materialization)."""
-    dedup = flat_checkpoint(dedup)
+    dedup = dedup.localCheckpoint(eager=True)
     keys = (
         dedup.select(F.col(src_col).alias("u"))
         .unionAll(dedup.select(F.col(dst_col).alias("u")))

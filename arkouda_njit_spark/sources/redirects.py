@@ -36,8 +36,6 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.checkpoints import flat_checkpoint
-
 
 def resolve_redirects(
     redirects: DataFrame,
@@ -60,14 +58,14 @@ def resolve_redirects(
         .agg(F.min("ptr").alias("ptr"))
     )
     srcs = f.select(F.col("url").alias("ptr")).withColumn("_is_src", F.lit(True))
-    state = flat_checkpoint(
+    state = (
         f.join(srcs, "ptr", "left").select(
             "url",
             "ptr",
             F.lit(1).cast("long").alias("hops"),
             F.col("_is_src").isNull().alias("done"),
         )
-    )
+    ).localCheckpoint(eager=True)
     # ceil(log2(cap)) rounds cover every chain of length <= cap; ONE more
     # pushes every still-live row (loop or longer chain) past the cap so
     # unresolved rows always report hops > max_hops
@@ -89,7 +87,7 @@ def resolve_redirects(
             (F.col("hops") + F.col("hops2")).alias("hops"),
             F.col("done2").alias("done"),
         )
-        nxt = flat_checkpoint(settled.unionByName(composed))
+        nxt = settled.unionByName(composed).localCheckpoint(eager=True)
         state.unpersist()
         state = nxt
     ok = F.col("done") & (F.col("hops") <= max_hops)

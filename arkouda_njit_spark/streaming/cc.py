@@ -44,8 +44,6 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.checkpoints import flat_checkpoint
-
 
 def _canon_edges(df: DataFrame) -> DataFrame:
     return (
@@ -66,13 +64,12 @@ def _min_root_fixpoint(pairs: DataFrame, max_rounds: int = 64) -> DataFrame:
     sym = pairs.select(F.col("a").alias("x"), F.col("b").alias("y")).unionAll(
         pairs.select(F.col("b").alias("x"), F.col("a").alias("y"))
     )
-    sym = flat_checkpoint(sym, eager=False)
-    lab = flat_checkpoint(
+    sym = sym.localCheckpoint(eager=False)
+    lab = (
         sym.select(F.col("x").alias("node"))
         .distinct()
-        .select("node", F.col("node").alias("root")),
-        eager=False,
-    )
+        .select("node", F.col("node").alias("root"))
+    ).localCheckpoint(eager=False)
     for _ in range(max_rounds):
         # candidate roots: own, neighbors' roots, and root-of-root
         # (pointer jumping halves chain depth per round)
@@ -89,13 +86,12 @@ def _min_root_fixpoint(pairs: DataFrame, max_rounds: int = 64) -> DataFrame:
             )
             .select("node", F.col("rr").alias("root"))
         )
-        nxt = flat_checkpoint(
+        nxt = (
             lab.unionAll(nbr)
             .unionAll(jump)
             .groupBy("node")
-            .agg(F.min("root").alias("root")),
-            eager=False,
-        )
+            .agg(F.min("root").alias("root"))
+        ).localCheckpoint(eager=False)
         changed = (
             nxt.join(lab.withColumnRenamed("root", "old"), "node")
             .filter(F.col("root") != F.col("old"))

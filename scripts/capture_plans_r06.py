@@ -32,22 +32,8 @@ from arkouda_njit_spark.session import get_spark  # noqa: E402
 spark = get_spark(master="local[32]", shuffle_partitions=32)
 spark.sparkContext.setLogLevel("ERROR")
 
-# patch the lineage cuts to identity AFTER the package installed its wrapper
-from arkouda_njit_spark.plans import checkpoints  # noqa: E402
-
-
-def _identity(df, eager=True):
-    return df
-
-
-checkpoints.flat_checkpoint = _identity
-# module-top `from ..plans.checkpoints import flat_checkpoint` binds copies;
-# rebind them in every already-imported package module
-for _m in list(sys.modules.values()):
-    if getattr(_m, "__name__", "").startswith("arkouda_njit_spark") and hasattr(
-        _m, "flat_checkpoint"
-    ):
-        _m.flat_checkpoint = _identity
+# patch the lineage cut to identity AFTER the package installed its wrapper
+# (every kernel checkpoints through DataFrame.localCheckpoint)
 try:
     from pyspark.sql.classic.dataframe import DataFrame as _CDF
 

@@ -50,3 +50,12 @@ def test_cc_resume(spark, tmp_path):
         metrics = json.load(f)
     iters = [m["iteration"] for m in metrics]
     assert 0 in iters and max(iters) > 0 and iters == sorted(iters)
+    # every epoch written carries the state's per-partition row counts;
+    # iterations not written as epochs carry none
+    epochs = {int(e.split("=", 1)[1]) for e in os.listdir(ckpt) if e.startswith("epoch=")}
+    assert epochs and epochs <= set(iters)
+    for m in metrics:
+        if m["iteration"] in epochs:
+            assert sum(m["partition_rows"].values()) == graph.n_vertices, m
+        else:
+            assert m["partition_rows"] == {}, m

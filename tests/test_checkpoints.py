@@ -1,16 +1,16 @@
-"""flat_checkpoint: stats must not compound across iterative checkpoints.
+"""localCheckpoint: stats must not compound across iterative checkpoints.
 
-Plain ``localCheckpoint`` preserves the pre-checkpoint plan's estimated
-Statistics (SPARK-39748); join-size estimation multiplies child sizes, so
-an iterative join loop compounds the estimate multiplicatively until the
-optimizer spends its time on million-digit BigInteger arithmetic
-(plans/checkpoints.py docstring). These tests pin the fix.
+Spark's own ``localCheckpoint`` preserves the pre-checkpoint plan's
+estimated Statistics (SPARK-39748); join-size estimation multiplies child
+sizes, so an iterative join loop compounds the estimate multiplicatively
+until the optimizer spends its time on million-digit BigInteger arithmetic
+(plans/checkpoints.py docstring). Importing the package wraps the method to
+drop those stats; these tests pin the fix.
 """
 
 from pyspark.sql import functions as F
 
 import arkouda_njit_spark.plans.checkpoints as C
-from arkouda_njit_spark.plans.checkpoints import flat_checkpoint
 
 
 def _size_in_bytes(df) -> int:
@@ -25,34 +25,32 @@ def test_strips_inherited_stats(spark):
         (F.col("id") % 100).alias("dst"), F.col("id").alias("v")
     )
     joined = a.join(b, "dst")
-    plain = joined.localCheckpoint()  # also wrapped once the package imports
-    flat = flat_checkpoint(joined)
+    flat = joined.localCheckpoint(eager=True)
     assert not C._STRIP_BROKEN, "LogicalRDD internals moved; fix _strip_origin_stats"
-    # the pre-checkpoint plan carries a join-product estimate; both
-    # checkpoint paths must reset it to the default leaf size
+    # the pre-checkpoint plan carries a join-product estimate; the
+    # checkpoint must reset it to the default leaf size
     default_size = int(spark.conf.get("spark.sql.defaultSizeInBytes", str(2**63 - 1)))
     assert _size_in_bytes(joined) != default_size
     assert _size_in_bytes(flat) == default_size
-    assert _size_in_bytes(plain) == default_size
     # same rows, same schema — only the estimate changed
-    assert flat.schema == plain.schema == joined.schema
-    assert sorted(map(tuple, flat.collect())) == sorted(map(tuple, plain.collect()))
+    assert flat.schema == joined.schema
+    assert sorted(map(tuple, flat.collect())) == sorted(map(tuple, joined.collect()))
 
 
 def test_no_compounding_across_iterations(spark):
     """15 join iterations: the size estimate must stay flat, not multiply.
 
-    With plain localCheckpoint the digit count of sizeInBytes multiplies
-    per iteration (3 references per step => ~3x digits/step); by step 15
-    the optimizer would be doing 10^7-digit BigInteger products. With
-    flat_checkpoint every step restarts from the default leaf estimate.
+    With Spark's unwrapped localCheckpoint the digit count of sizeInBytes
+    multiplies per iteration (3 references per step => ~3x digits/step);
+    by step 15 the optimizer would be doing 10^7-digit BigInteger
+    products. Wrapped, every step restarts from the default leaf estimate.
     """
     edges = spark.range(2000).select(
         F.col("id").alias("src"), ((F.col("id") * 13 + 7) % 500).alias("dst")
     )
-    state = flat_checkpoint(
-        edges.select(F.col("src").alias("vid"), F.col("src").alias("lbl"))
-    )
+    state = edges.select(
+        F.col("src").alias("vid"), F.col("src").alias("lbl")
+    ).localCheckpoint(eager=True)
     sizes = []
     for _ in range(15):
         nxt = (
@@ -64,7 +62,7 @@ def test_no_compounding_across_iterations(spark):
             .groupBy(F.col("dst").alias("vid"))
             .agg(F.min(F.least("lbl", "l2")).alias("lbl"))
         )
-        state = flat_checkpoint(nxt)
+        state = nxt.localCheckpoint(eager=True)
         sizes.append(_size_in_bytes(state))
     # every iteration's leaf estimate is identical — zero compounding
     assert len(set(sizes)) == 1, sizes
@@ -83,8 +81,8 @@ def test_install_covers_plain_method(spark):
     assert not C._STRIP_BROKEN
 
 
-def test_lazy_flat_checkpoint(spark):
+def test_lazy_checkpoint(spark):
     df = spark.range(100).select(F.col("id").alias("v"))
-    lz = flat_checkpoint(df, eager=False)
+    lz = df.localCheckpoint(eager=False)
     assert lz.count() == 100
     assert sorted(r["v"] for r in lz.collect()) == list(range(100))

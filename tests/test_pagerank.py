@@ -1,5 +1,7 @@
 """PageRank vs networkx.pagerank (allclose 1e-6 — north rule)."""
 
+import os
+
 import networkx as nx
 import pytest
 
@@ -38,6 +40,28 @@ def test_pagerank_weighted(spark):
     wgt = [1.0, 2.0, 3.0, 4.0]
     graph = Graph.from_edges(spark, src, dst, wgt)
     _compare(graph, nx_graph(src, dst, wgt), weight="weight")
+
+
+def test_pagerank_resume_fixed_iterations(spark, tmp_path):
+    """A fixed-iteration run stopped after 3 steps and resumed to 6 equals
+    an uninterrupted 6-step run: the final epoch is labelled with the last
+    completed iteration, so the resumed run neither skips nor repeats one."""
+    graph = DiGraph.from_edges(spark, ALGO28_SRC, ALGO28_DST)
+    ckpt = str(tmp_path / "pr_ckpt")
+
+    def ranks(**kw):
+        return {r["vid"]: r["rank"] for r in pagerank(graph, tol=0.0, **kw).collect()}
+
+    ranks(max_iterations=3, checkpoint_dir=ckpt)
+    assert sorted(e for e in os.listdir(ckpt) if e.startswith("epoch=")) == [
+        "epoch=0",
+        "epoch=2",
+    ]
+    resumed = ranks(max_iterations=6, checkpoint_dir=ckpt)
+    straight = ranks(max_iterations=6)
+    assert resumed.keys() == straight.keys()
+    for vid, rank in straight.items():
+        assert resumed[vid] == pytest.approx(rank, abs=1e-12, rel=0)
 
 
 class TestPersonalizedPagerank:

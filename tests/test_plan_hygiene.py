@@ -53,12 +53,7 @@ def test_pagerank_iteration_plan_shape(spark):
         eager=True
     )
     step = (
-        trans.join(
-            state_join_side(
-                state.withColumnRenamed("vid", "src"), n, strategy="shuffle_hash"
-            ),
-            "src",
-        )
+        trans.join(state.withColumnRenamed("vid", "src").hint("shuffle_hash"), "src")
         .select(F.col("dst").alias("vid"), (F.col("p") * F.col("rank")).alias("c"))
         .unionAll(g.vertices.select("vid", F.lit(0.0).alias("c")))
         .groupBy("vid")
@@ -66,7 +61,7 @@ def test_pagerank_iteration_plan_shape(spark):
     )
     plan = _plan(step)
     # the checkpointed transition table is scanned as a flat RDD leaf
-    # (r6: flat_checkpoint replaced the columnar cache whose per-scan
+    # (r6: a localCheckpoint replaced the columnar cache whose per-scan
     # decode dominated the iteration) and is NEVER re-shuffled: the only
     # allowed exchanges are the V-sized state side's co-partitioning
     # (hash(src)) and the aggregation's hashpartitioning(vid) — the
