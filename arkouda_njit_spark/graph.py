@@ -13,7 +13,7 @@ Reference semantics (capability parity, not a port):
 
 Spark-first design (SURVEY.md §1.4): a graph is a pair of DataFrames
 
-  ``edges(src_block int, src long, dst long, weight double)``
+  ``edges(src long, dst long, weight double)``
      hash-partitioned on ``src`` into ``num_partitions`` partitions and
      sorted within partitions by (src, dst) — the Double-Index layout's
      moral equivalent. For undirected graphs the table is *symmetric*
@@ -22,7 +22,12 @@ Spark-first design (SURVEY.md §1.4): a graph is a pair of DataFrames
 
   ``vertices(vid long, label long)``
      the VERTEX_MAP: dense internal id (0..n-1, dense rank of ascending
-     original label — graphclass.py:213-223) → original label.
+     original label — graphclass.py:213-223) → original label. String
+     keys (urls, hosts) give ``vertices(vid, label = vid, url)``.
+
+``Graph._build`` is the one place that turns (src, dst, weight) rows into
+these tables, whatever the key type; ``_remap`` and ``_layout`` are the
+pieces the relabels and ``Graph.read`` share with it.
 
 The CSR ``SEGMENTS`` arrays are NOT materialized: per-vertex adjacency is
 recovered by hash partitioning + sort, and every kernel is a join/agg over
@@ -36,10 +41,40 @@ from typing import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
-from .plans.partitioning import dense_rank_ids
+from .plans.joins import BROADCAST_MAX_VERTICES
+from .plans.partitioning import dense_rank_ids_counted
 
-EDGE_COLS = ("src_block", "src", "dst", "weight")
+
+def _remap(
+    edges: DataFrame, vmap: DataFrame, old: str, new: str, n_vertices: int
+) -> DataFrame:
+    """Rewrite the src and dst of (src, dst, weight) rows through
+    ``vmap(old -> new)``. The map's size is opaque to Catalyst after the
+    mapInPandas dense rank, so hint broadcast explicitly while it fits
+    (sort-merge with a full edge shuffle otherwise — correct at
+    10^12-vertex scale, wasteful below it)."""
+    vsrc = vmap.select(F.col(old).alias("src"), F.col(new).alias("_svid"))
+    vdst = vmap.select(F.col(old).alias("dst"), F.col(new).alias("_dvid"))
+    if n_vertices <= BROADCAST_MAX_VERTICES:
+        vsrc, vdst = F.broadcast(vsrc), F.broadcast(vdst)
+    return (
+        edges.join(vsrc, "src").join(vdst, "dst")
+        .select(F.col("_svid").alias("src"), F.col("_dvid").alias("dst"), "weight")
+    )
+
+
+def _layout(edges: DataFrame, P: int) -> DataFrame:
+    """The edge-table contract, persisted: (src, dst, weight) hash-
+    partitioned on src into ``P`` partitions, sorted by (src, dst) within
+    each."""
+    return (
+        edges.select("src", "dst", "weight")
+        .repartition(P, "src")
+        .sortWithinPartitions("src", "dst")
+        .persist()
+    )
 
 
 def _as_edge_df(
@@ -130,7 +165,11 @@ class Graph:
         num_partitions: int | None,
         no_self_loops: bool = True,
     ):
+        """Canonical tables from raw (src, dst, weight) rows keyed by long
+        labels, or by strings (urls, hosts): string keys give vertices
+        (vid, label = vid, url) instead of (vid, label)."""
         P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+        key = "url" if isinstance(raw.schema["src"].dataType, StringType) else "label"
         if not cls.directed:
             # Reference default drops self-loops (graphclass.py:199-203);
             # with no_self_loops=False a loop survives dedup once (its
@@ -154,10 +193,16 @@ class Graph:
             raw = raw.filter(F.col("src") != F.col("dst"))
 
         # Dedup; duplicate weights sum-aggregated — graphclass.py:192-196.
-        # Persisted: the canonical pair set feeds three consumers (label
+        # Held: the canonical pair set feeds three consumers (label
         # extraction, the range-partitioner sampling pass of the dense
         # remap, and the remap joins) — without it the dedup shuffle
-        # re-executes for each.
+        # re-executes for each. String keys come from Arrow link
+        # extraction: a checkpoint keeps that pass out of every downstream
+        # plan, which AQE otherwise re-renders on each stage update (~2-3 s
+        # of driver time per triangle_count on a 16k-page crawl, 4 vCPUs).
+        # Integer builds persist and free the table below: a checkpoint
+        # there broke a self-join in the SCC/bow-tie query ("Failure when
+        # resolving conflicting references in Join").
         dedup = raw.groupBy("src", "dst").agg(F.sum("weight").alias("weight"))
         if not cls.directed and not no_self_loops:
             # symmetrize+sum doubled a kept loop's weight (both mirrored
@@ -168,43 +213,24 @@ class Graph:
                     F.col("src") == F.col("dst"), F.col("weight") * 2
                 ).otherwise(F.col("weight")),
             )
-        dedup = dedup.persist()
+        dedup = dedup.localCheckpoint(eager=False) if key == "url" else dedup.persist()
 
         # Dense vertex remap, ascending original label — graphclass.py:213-223.
         # Scalable two-pass dense rank (no single-partition window): see
-        # plans/partitioning.dense_rank_ids.
+        # plans/partitioning.dense_rank_ids. It already counts the labels,
+        # so no vertices.count() action is needed; the persisted vertices
+        # materialize inside the edge build's first broadcast construction.
         labels = (
-            dedup.select(F.col("src").alias("label"))
-            .unionAll(dedup.select(F.col("dst").alias("label")))
+            dedup.select(F.col("src").alias(key))
+            .unionAll(dedup.select(F.col("dst").alias(key)))
             .distinct()
         )
-        # The two-pass dense rank already counts the labels, so the old
-        # explicit vertices.count() action (a full extra pass over the
-        # vertex table) is unnecessary; the persisted vertices materialize
-        # inside the edge build's first broadcast construction below.
-        from .plans.partitioning import dense_rank_ids_counted
-
-        vertices, n_vertices = dense_rank_ids_counted(labels, "label", P, out_col="vid")
+        vertices, n_vertices = dense_rank_ids_counted(labels, key, P, out_col="vid")
+        if key == "url":
+            vertices = vertices.select("vid", F.col("vid").alias("label"), "url")
         vertices = vertices.repartition(P, "vid").persist()
 
-        # Remap joins: the vertex map's size is opaque to Catalyst after the
-        # mapInPandas dense rank, so hint broadcast explicitly while it fits
-        # (sort-merge with a full edge shuffle otherwise — correct at
-        # 10^12-vertex scale, wasteful below it).
-        from .plans.joins import BROADCAST_MAX_VERTICES
-
-        vsrc = vertices.select(F.col("label").alias("src"), F.col("vid").alias("_svid"))
-        vdst = vertices.select(F.col("label").alias("dst"), F.col("vid").alias("_dvid"))
-        if n_vertices <= BROADCAST_MAX_VERTICES:
-            vsrc, vdst = F.broadcast(vsrc), F.broadcast(vdst)
-        remapped = (
-            dedup.join(vsrc, "src").join(vdst, "dst")
-            .select(
-                F.col("_svid").alias("src"),
-                F.col("_dvid").alias("dst"),
-                "weight",
-            )
-        )
+        remapped = _remap(dedup, vertices, key, "vid", n_vertices)
         if not cls.directed:
             # Mirror the canonical (lo, hi) rows back into the symmetric
             # table (each non-loop pair in both orientations, a self-loop
@@ -217,13 +243,7 @@ class Graph:
                     "weight",
                 )
             )
-        edges = (
-            remapped.withColumn("src_block", F.pmod(F.xxhash64("src"), F.lit(P)).cast("int"))
-            .select(*EDGE_COLS)
-            .repartition(P, "src")
-            .sortWithinPartitions("src", "dst")
-            .persist()
-        )
+        edges = _layout(remapped, P)
         total = edges.count()  # materialize the canonical table; free dedup
         dedup.unpersist()
         # n_edges comes free from the materialization count whenever the
@@ -433,12 +453,7 @@ class Graph:
     @classmethod
     def read(cls, spark: SparkSession, path: str, num_partitions: int | None = None) -> "Graph":
         P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-        edges = (
-            spark.read.parquet(f"{path}/edges")
-            .repartition(P, "src")
-            .sortWithinPartitions("src", "dst")
-            .persist()
-        )
+        edges = _layout(spark.read.parquet(f"{path}/edges"), P)
         vertices = spark.read.parquet(f"{path}/vertices").repartition(P, "vid").persist()
         return cls(edges, vertices, num_partitions=P)
 

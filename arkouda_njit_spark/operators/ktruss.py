@@ -30,7 +30,9 @@ from .triangles import (
     BIG_EDGE_THRESHOLD,
     PACKED_BROADCAST_MAX_EDGES,
     PACKED_KEY_MAX_VERTICES,
+    _closed_wedges,
     _undirected_simple_edges,
+    oriented_edges,
 )
 
 # per-round deletion batches up to this size use the incremental
@@ -40,69 +42,14 @@ from .triangles import (
 INCREMENTAL_MAX_DELETED = 500_000
 
 
-def _support(
-    edges: DataFrame,
-    big: bool = False,
-    n_vertices: int | None = None,
-    n_edges: int | None = None,
-) -> DataFrame:
+def _support(edges: DataFrame, n_vertices: int, n_edges: int) -> DataFrame:
     """Per-edge triangle support over an (u,v) u<v edge set: for each edge,
-    the number of triangles it participates in.
-
-    ``big=True`` hints shuffle_hash on the wedge self-join and the closing
-    semi-join — same dispatch as ``triangles._triangle_rows_cached``: a
-    BroadcastHashJoin builds its hash relation single-threaded on the
-    driver (measured FLAT 2→8 scaling on RMAT-18) and is impossible at
-    10^12 edges; shuffle_hash builds per-partition maps in parallel.
-
-    ``n_vertices`` (when known and < 2^31) packs the closing join's
-    (b, c) pair into ONE long key — the LongHashedRelation probe that
-    measured 3-4x faster than the two-key probe on the triangle kernel
-    (triangles.PACKED_KEY_MAX_VERTICES)."""
-    deg = (
-        edges.select(F.col("u").alias("vid"))
-        .unionAll(edges.select(F.col("v").alias("vid")))
-        .groupBy("vid")
-        .agg(F.count("*").alias("deg"))
+    the number of triangles it participates in. The triangles come from
+    the triangle kernel's own orientation and wedge path
+    (``triangles._closed_wedges``), with the same size-dispatched joins."""
+    tri = _closed_wedges(
+        oriented_edges(None, und=edges), edges, n_vertices, n_edges
     )
-    du = deg.select(F.col("vid").alias("u"), F.col("deg").alias("du"))
-    dv = deg.select(F.col("vid").alias("v"), F.col("deg").alias("dv"))
-    o = (
-        edges.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(
-                (F.col("du") < F.col("dv"))
-                | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))),
-                F.struct(F.col("u").alias("lo"), F.col("v").alias("hi")),
-            )
-            .otherwise(F.struct(F.col("v").alias("lo"), F.col("u").alias("hi")))
-            .alias("e")
-        )
-        .select("e.lo", "e.hi")
-    )
-    sh = (lambda df: df.hint("shuffle_hash")) if big else (lambda df: df)
-    w1 = o.select(F.col("lo").alias("p"), F.col("hi").alias("b"))
-    w2 = o.select(F.col("lo").alias("p"), F.col("hi").alias("c"))
-    wedges = w1.join(sh(w2), "p").filter(F.col("b") < F.col("c"))
-    if n_vertices is not None and 0 < n_vertices < PACKED_KEY_MAX_VERTICES:
-        # packed build side stays broadcast far beyond the two-key
-        # threshold — shuffle_hash would exchange the wedge STREAM by the
-        # key (triangles.PACKED_BROADCAST_MAX_EDGES: measured 5.8 s vs
-        # 18.5 s at 1.86M edges / 754M wedges)
-        v = F.lit(int(n_vertices))
-        ek = edges.select((F.col("u") * v + F.col("v")).alias("uv"))
-        if n_edges is not None and n_edges >= PACKED_BROADCAST_MAX_EDGES:
-            ek = ek.hint("shuffle_hash")
-        tri = wedges.join(
-            ek, (F.col("b") * v + F.col("c")) == F.col("uv"), "left_semi"
-        ).select(F.col("p").alias("a"), "b", "c")
-    else:
-        tri = wedges.join(
-            sh(edges),
-            (F.col("b") == F.col("u")) & (F.col("c") == F.col("v")),
-            "left_semi",
-        ).select(F.col("p").alias("a"), "b", "c")
     # each triangle supports its 3 edges (normalize to u<v)
     e1 = tri.select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
     e2 = tri.select(F.least("a", "c").alias("u"), F.greatest("a", "c").alias("v"))
@@ -159,12 +106,11 @@ def _core_edges(
 def _truss_state(
     edges: DataFrame,
     k: int,
+    n_vertices: int,
+    n_edges: int,
     max_rounds: int = 100,
     checkpoint_dir: str | None = None,
-    big: bool = False,
     support_state: DataFrame | None = None,
-    n_vertices: int | None = None,
-    n_edges: int | None = None,
 ) -> DataFrame:
     """Fixpoint (u, v, support) state of the k-truss (support >= k-2).
 
@@ -182,6 +128,7 @@ def _truss_state(
     (max_truss / truss_decomposition thread it through their k sweeps)."""
     from ..plans.iterate import FixpointLoop
 
+    big = n_edges >= BIG_EDGE_THRESHOLD
     sh = (lambda df: df.hint("shuffle_hash")) if big else (lambda df: df)
 
     # INCREMENTAL peeling (round 4): full support is computed ONCE; each
@@ -204,12 +151,7 @@ def _truss_state(
             # a huge deletion batch (typically round 1): Σ deg over D
             # approaches the full wedge join — recompute support on the
             # survivor graph directly instead
-            return _support(
-                survivors.select("u", "v"),
-                big=big,
-                n_vertices=n_vertices,
-                n_edges=n_edges,
-            )
+            return _support(survivors.select("u", "v"), n_vertices, n_edges)
         g_edges = state.select("u", "v")
         sym = g_edges.select(F.col("u").alias("x"), F.col("v").alias("n")).unionAll(
             g_edges.select(F.col("v").alias("x"), F.col("u").alias("n"))
@@ -218,15 +160,12 @@ def _truss_state(
             F.broadcast(deleted.select(F.col("u").alias("x"), F.col("v").alias("dv"))),
             "x",
         ).select(F.col("x").alias("du"), "dv", F.col("n").alias("w"))
-        if n_vertices is not None and 0 < n_vertices < PACKED_KEY_MAX_VERTICES:
+        if 0 < n_vertices < PACKED_KEY_MAX_VERTICES:
             # packed single-long probe key, broadcast-built below the
-            # packed cap — see _support
+            # packed cap — see triangles._closing_semi_join
             v_ = F.lit(int(n_vertices))
             symk = sym.select((F.col("x") * v_ + F.col("n")).alias("dvw"))
-            if (
-                n_edges is not None
-                and 2 * n_edges >= PACKED_BROADCAST_MAX_EDGES
-            ):
+            if 2 * n_edges >= PACKED_BROADCAST_MAX_EDGES:
                 symk = symk.hint("shuffle_hash")
             tri = wedge.join(
                 symk,
@@ -268,35 +207,30 @@ def _truss_state(
     )
     if support_state is None:
         edges = _core_edges(edges, k - 1)
-        support_state = _support(
-            edges, big=big, n_vertices=n_vertices, n_edges=n_edges
-        )
+        support_state = _support(edges, n_vertices, n_edges)
     return loop.run(support_state)
 
 
 def _truss_edges(
     edges: DataFrame,
     k: int,
+    n_vertices: int,
+    n_edges: int,
     max_rounds: int = 100,
     checkpoint_dir: str | None = None,
-    big: bool = False,
-    n_vertices: int | None = None,
-    n_edges: int | None = None,
 ) -> DataFrame:
     """Surviving (u,v) edge set of the k-truss (support >= k-2 fixpoint)."""
     return _truss_state(
-        edges, k, max_rounds=max_rounds, checkpoint_dir=checkpoint_dir,
-        big=big, n_vertices=n_vertices, n_edges=n_edges,
+        edges, k, n_vertices, n_edges, max_rounds=max_rounds,
+        checkpoint_dir=checkpoint_dir,
     ).select("u", "v")
 
 
 def k_truss(graph: Graph, k: int, checkpoint_dir: str | None = None) -> DataFrame:
     """(u, v, value) over canonical u<v edges: -1 survives, k-1 deleted."""
     edges = _undirected_simple_edges(graph)
-    big = graph.n_edges >= BIG_EDGE_THRESHOLD
     kept = _truss_edges(
-        edges, k, checkpoint_dir=checkpoint_dir, big=big,
-        n_vertices=graph.n_vertices, n_edges=graph.n_edges,
+        edges, k, graph.n_vertices, graph.n_edges, checkpoint_dir=checkpoint_dir
     )
     return edges.join(kept.withColumn("_kept", F.lit(1)), ["u", "v"], "left").select(
         "u",
@@ -319,11 +253,8 @@ def max_truss(graph: Graph) -> int:
     if edges.isEmpty():
         return 0
     m = edges.count()
-    big = m >= BIG_EDGE_THRESHOLD
     n_verts = graph.n_vertices
-    sup0 = _support(
-        edges, big=big, n_vertices=n_verts, n_edges=m
-    ).localCheckpoint(eager=True)
+    sup0 = _support(edges, n_verts, m).localCheckpoint(eager=True)
     max_sup = sup0.agg(F.max("support")).collect()[0][0] or 0
     if max_sup == 0:
         return 2
@@ -333,10 +264,7 @@ def max_truss(graph: Graph) -> int:
         mid = (lo + hi) // 2
         # thread the largest known-feasible fixpoint state: supports are
         # exact within its surviving graph, so no probe recomputes support
-        state = _truss_state(
-            edges, mid, big=big, support_state=best_state,
-            n_vertices=n_verts, n_edges=m,
-        )
+        state = _truss_state(edges, mid, n_verts, m, support_state=best_state)
         if state.isEmpty():
             hi = mid - 1
         else:
@@ -350,17 +278,13 @@ def truss_decomposition(graph: Graph) -> DataFrame:
     edges = _undirected_simple_edges(graph).localCheckpoint(eager=True)
     spark = edges.sparkSession
     m = edges.count()
-    big = m >= BIG_EDGE_THRESHOLD
     assigned = None  # (u, v, truss)
     cur = edges
     state = None  # (u, v, support) fixpoint of level k-1, threaded through
     k = 3
     n_verts = graph.n_vertices
     while not cur.isEmpty():
-        state = _truss_state(
-            cur, k, big=big, support_state=state, n_vertices=n_verts,
-            n_edges=m,
-        )
+        state = _truss_state(cur, k, n_verts, m, support_state=state)
         kept = state.select("u", "v")
         removed = cur.join(kept, ["u", "v"], "left_anti").withColumn(
             "truss", F.lit(k - 1)

@@ -101,11 +101,12 @@ def _undirected_simple_edges(graph: Graph) -> DataFrame:
     )
 
 
-def oriented_edges(graph: Graph, und: DataFrame | None = None) -> DataFrame:
+def oriented_edges(graph: Graph | None, und: DataFrame | None = None) -> DataFrame:
     """Degree-ordered orientation: (lo, hi) with (deg,vid) of lo < of hi.
 
     Pass a (persisted) ``und`` to reuse the canonical pair set — the
-    distinct() behind it is a shuffle worth paying once, not twice."""
+    distinct() behind it is a shuffle worth paying once, not twice; the
+    graph is then not read."""
     if und is None:
         und = _undirected_simple_edges(graph)
     deg = (
@@ -133,6 +134,28 @@ def oriented_edges(graph: Graph, und: DataFrame | None = None) -> DataFrame:
     return ordered
 
 
+def _closed_wedges(
+    o: DataFrame, und: DataFrame, n_vertices: int, n_edges: int
+) -> DataFrame:
+    """Triangle rows (a, b, c) of the oriented table ``o`` (lo, hi): the
+    wedge self-join on the pivot ``lo``, closed by a semi-join against the
+    pair set ``und`` (u, v), u < v.
+
+    Join strategy: a BroadcastHashJoin builds its hash relation
+    single-threaded on the driver — measured FLAT 2→8-thread scaling on
+    RMAT-18 — and is impossible at 10^12 edges. Past
+    WEDGE_SHUFFLE_HASH_THRESHOLD edges the self-join hints shuffle_hash,
+    which stays exchange-free when ``o`` is hash-partitioned on lo (both
+    sides share that partitioning) and builds per-partition hash maps in
+    parallel; small graphs stay on the broadcast fast path."""
+    wsh = n_edges >= WEDGE_SHUFFLE_HASH_THRESHOLD
+    sh = (lambda df: df.hint("shuffle_hash")) if wsh else (lambda df: df)
+    w1 = o.select(F.col("lo").alias("p"), F.col("hi").alias("b"))
+    w2 = o.select(F.col("lo").alias("p"), F.col("hi").alias("c"))
+    wedges = w1.join(sh(w2), "p").filter(F.col("b") < F.col("c"))
+    return _closing_semi_join(wedges, und, n_vertices, n_edges)
+
+
 def _triangle_rows_cached(
     graph: Graph, und: DataFrame | None = None
 ) -> tuple[DataFrame, list[DataFrame]]:
@@ -146,21 +169,7 @@ def _triangle_rows_cached(
     P = graph.num_partitions
     und = (_undirected_simple_edges(graph) if und is None else und).persist()
     o = oriented_edges(graph, und=und).repartition(P, "lo").persist()
-    # Join strategy: past ~1M edges the oriented/pair tables cross the
-    # broadcast threshold in estimated size anyway, but more importantly a
-    # BroadcastHashJoin builds its hash relation single-threaded on the
-    # driver — measured FLAT 2→8-thread scaling on RMAT-18 — and is
-    # impossible at 10^12 edges. shuffle_hash keeps the wedge self-join
-    # exchange-free (both sides share o's hashpartitioning(lo)) and builds
-    # per-partition hash maps in parallel; small graphs stay on the
-    # broadcast fast path.
-    wsh = graph.n_edges >= WEDGE_SHUFFLE_HASH_THRESHOLD
-    sh = (lambda df: df.hint("shuffle_hash")) if wsh else (lambda df: df)
-    w1 = o.select(F.col("lo").alias("p"), F.col("hi").alias("b"))
-    w2 = o.select(F.col("lo").alias("p"), F.col("hi").alias("c"))
-    wedges = w1.join(sh(w2), "p").filter(F.col("b") < F.col("c"))
-    closed = _closing_semi_join(wedges, und, graph.n_vertices, graph.n_edges)
-    return closed, [und, o]
+    return _closed_wedges(o, und, graph.n_vertices, graph.n_edges), [und, o]
 
 
 def _triangle_rows_localized(
@@ -193,13 +202,7 @@ def _triangle_rows_localized(
         .repartition(P, "lo")
         .persist()
     )
-    wsh = graph.n_edges >= WEDGE_SHUFFLE_HASH_THRESHOLD
-    sh = (lambda df: df.hint("shuffle_hash")) if wsh else (lambda df: df)
-    w1 = o.select(F.col("lo").alias("p"), F.col("hi").alias("b"))
-    w2 = o.select(F.col("lo").alias("p"), F.col("hi").alias("c"))
-    wedges = w1.join(sh(w2), "p").filter(F.col("b") < F.col("c"))
-    closed = _closing_semi_join(wedges, und, graph.n_vertices, graph.n_edges)
-    return closed, [und, o]
+    return _closed_wedges(o, und, graph.n_vertices, graph.n_edges), [und, o]
 
 
 def triangle_rows(graph: Graph) -> DataFrame:

@@ -176,34 +176,14 @@ def write_graph_file(graph, path: str) -> None:
 
 def _apply_relabel(graph, mapping: DataFrame):
     """Rebuild a Graph with vids permuted by ``mapping`` (vid, new): edges
-    remapped via two broadcast-or-shuffle joins, re-bucketed on the new src,
-    vertices carry the ORIGINAL labels under their new vids."""
-    from ..graph import EDGE_COLS
-    from ..plans.joins import BROADCAST_MAX_VERTICES
+    remapped and laid out by Graph._build's own helpers, vertices carry the
+    ORIGINAL labels under their new vids."""
+    from ..graph import _layout, _remap
 
     P = graph.num_partitions
-    m = mapping.select("vid", "new")
-    if graph.n_vertices <= BROADCAST_MAX_VERTICES:
-        m = F.broadcast(m)
-    new_edges = (
-        graph.edges.join(m.withColumnRenamed("vid", "src"), "src")
-        .withColumnRenamed("new", "_s")
-        .join(
-            m.withColumnRenamed("vid", "dst").withColumnRenamed("new", "_d"),
-            "dst",
-        )
-        .select(
-            F.pmod(F.xxhash64(F.col("_s")), F.lit(P)).cast("int").alias("src_block"),
-            F.col("_s").alias("src"),
-            F.col("_d").alias("dst"),
-            "weight",
-        )
-        .select(*EDGE_COLS)
-        .repartition(P, "src")
-        .sortWithinPartitions("src", "dst")
-    )
+    new_edges = _layout(_remap(graph.edges, mapping, "vid", "new", graph.n_vertices), P)
     new_vertices = (
-        graph.vertices.join(m, "vid")
+        graph.vertices.join(mapping.select("vid", "new"), "vid")
         .select(F.col("new").alias("vid"), "label")
         .repartition(P, "vid")
     )
@@ -213,6 +193,7 @@ def _apply_relabel(graph, mapping: DataFrame):
         weighted=graph.weighted,
         num_partitions=P,
         n_vertices=graph.n_vertices,
+        n_edges=graph._n_edges,
     )
 
 

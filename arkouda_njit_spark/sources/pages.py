@@ -11,10 +11,11 @@ web-graph build — the engine's primary input path (BASELINE.json.input_hint:
   (no per-row Python, per input_hint): html → hrefs via a compiled regex
   over a pandas string series; text extraction is pure and deterministic so
   the per-url extracted text is byte-identical run-to-run (tests hash it).
-* ``build_web_graph`` canonicalizes url→url links into the engine's edge
-  table: dedup with weight = duplicate-link count, self-link removal, dense
-  vid remap by ascending url — the reference's ``add_edges_from`` pipeline
-  (graphclass.py:150-233) re-expressed over string-keyed web pages.
+* ``build_web_graph`` / ``build_host_graph`` hand (url, href, 1.0) link
+  rows to ``DiGraph._build``, the engine's one edge-table build: dedup
+  with weight = duplicate-link count, self-link removal, dense vid remap by
+  ascending url — the reference's ``add_edges_from`` pipeline
+  (graphclass.py:150-233) over string-keyed web pages.
 """
 
 from __future__ import annotations
@@ -25,7 +26,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..graph import DiGraph
-from ..plans.partitioning import dense_rank_ids, dense_rank_ids_counted
 
 TWO63 = float(2**63)
 
@@ -277,68 +277,6 @@ def extract_host(col):
     return F.lower(host)
 
 
-def _string_keyed_digraph(
-    dedup: DataFrame, src_col: str, dst_col: str, P: int, eager: bool = False
-) -> DiGraph:
-    """Assemble the engine's canonical DiGraph from a deduplicated
-    string-keyed edge table (src_col, dst_col, weight): dense vid remap by
-    ascending key, src_block tag, src-partitioned sorted edge buckets.
-    One implementation for the url graph, the host rollup, and streaming
-    snapshots — ``eager`` swaps persist() for an eager localCheckpoint so
-    the result outlives its source files (streaming state GC).
-
-    The deduplicated link table is eagerly materialized FIRST: it feeds
-    the key-extraction pass and the remap joins, and for the web graph
-    its lineage contains the Arrow link-extraction pass over the raw
-    html — without the checkpoint each consumer re-ran that Python pass
-    (measured as the dominant cost of the downstream pagerank's prepare
-    step, which happened to trigger the first materialization)."""
-    dedup = dedup.localCheckpoint(eager=True)
-    keys = (
-        dedup.select(F.col(src_col).alias("u"))
-        .unionAll(dedup.select(F.col(dst_col).alias("u")))
-        .distinct()
-    )
-    vertices, n_keys = dense_rank_ids_counted(keys, "u", P, out_col="vid")
-    vertices = vertices.withColumnRenamed("u", "url")
-    # The vertex map's size is opaque to Catalyst after the mapInPandas
-    # dense rank, so the string-keyed remap joins planned as sort-merge
-    # with full exchanges of BOTH sides; hint broadcast while the map fits
-    # (the Graph._build pattern) — the two-pass dense rank already knows n
-    # for free, so the decision costs no extra action (guide §3.1).
-    from ..plans.joins import BROADCAST_MAX_VERTICES
-
-    vsrc = vertices.select(F.col("url").alias(src_col), F.col("vid").alias("_svid"))
-    vdst = vertices.select(F.col("url").alias(dst_col), F.col("vid").alias("_dvid"))
-    if n_keys <= BROADCAST_MAX_VERTICES:
-        vsrc, vdst = F.broadcast(vsrc), F.broadcast(vdst)
-    remapped = (
-        dedup.join(vsrc, src_col)
-        .join(vdst, dst_col)
-        .select(F.col("_svid").alias("src"), F.col("_dvid").alias("dst"), "weight")
-    )
-
-    def hold(df):
-        return df.localCheckpoint(eager=True) if eager else df.persist()
-
-    edges = hold(
-        remapped.withColumn("src_block", F.pmod(F.xxhash64("src"), F.lit(P)).cast("int"))
-        .select("src_block", "src", "dst", "weight")
-        .repartition(P, "src")
-        .sortWithinPartitions("src", "dst")
-    )
-    verts = hold(
-        vertices.select("vid", F.col("vid").alias("label"), "url").repartition(P, "vid")
-    )
-    if not eager:
-        # materialize the persists now: the first kernel action otherwise
-        # references the cold caches from several subtrees at once and the
-        # concurrent scans recompute the remap joins per consumer
-        edges.count()
-        verts.count()
-    return DiGraph(edges, verts, weighted=True, num_partitions=P)
-
-
 def build_host_graph(pages: DataFrame, num_partitions: int | None = None) -> DiGraph:
     """Host-level link graph: url→url links aggregated to host→host (the
     Common-Crawl "host webgraph" rollup). Weight = number of url-level
@@ -348,19 +286,14 @@ def build_host_graph(pages: DataFrame, num_partitions: int | None = None) -> DiG
     the host graph is ~3 orders of magnitude smaller than the url graph,
     so this is the cheap summary view."""
     spark = pages.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     links = extract_links(pages)
     links = links.join(pages.select(F.col("url").alias("href")), "href", "left_semi")
-    hl = links.select(
-        extract_host("url").alias("src_host"), extract_host("href").alias("dst_host")
-    ).filter(
-        (F.col("src_host") != "") & (F.col("dst_host") != "")
-        & (F.col("src_host") != F.col("dst_host"))
-    )
-    dedup = hl.groupBy("src_host", "dst_host").agg(
-        F.count("*").cast("double").alias("weight")
-    )
-    return _string_keyed_digraph(dedup, "src_host", "dst_host", P)
+    rows = links.select(
+        extract_host("url").alias("src"),
+        extract_host("href").alias("dst"),
+        F.lit(1.0).alias("weight"),
+    ).filter((F.col("src") != "") & (F.col("dst") != ""))
+    return DiGraph._build(spark, rows, True, num_partitions)
 
 
 def build_web_graph(
@@ -377,7 +310,6 @@ def build_web_graph(
     collapse to one vertex); off by default because the synthetic
     generator already emits canonical urls."""
     spark = pages.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     links = extract_links(pages)
     if canonicalize:
         links = links.select(
@@ -388,12 +320,10 @@ def build_web_graph(
     # otherwise mint phantom vertices — a policy choice; CommonCrawl link
     # graphs typically keep them, the reference only knows int vertices).
     links = links.join(pages.select(F.col("url").alias("href")), "href", "left_semi")
-    dedup = (
-        links.filter(F.col("url") != F.col("href"))
-        .groupBy("url", "href")
-        .agg(F.count("*").cast("double").alias("weight"))
+    rows = links.select(
+        F.col("url").alias("src"), F.col("href").alias("dst"), F.lit(1.0).alias("weight")
     )
-    return _string_keyed_digraph(dedup, "url", "href", P)
+    return DiGraph._build(spark, rows, True, num_partitions)
 
 
 def snapshot_diff(

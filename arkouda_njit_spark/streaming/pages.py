@@ -16,8 +16,8 @@ This sink maintains exactly that:
     promotes a single manifest holding the state pointer + last applied
     epoch, so replayed foreachBatch epochs are skipped idempotently and a
     crash can never tear state;
-  * ``snapshot_graph()`` canonicalizes the current link table into the
-    engine's DiGraph exactly like ``build_web_graph`` (dedup weight =
+  * ``snapshot_graph()`` hands the current link table to
+    ``DiGraph._build``, as ``build_web_graph`` does (dedup weight =
     duplicate-link count, self-link drop, dense vid remap) — analytics
     run on a consistent snapshot while ingestion continues.
 
@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..graph import DiGraph
-from ..sources.pages import _string_keyed_digraph, extract_links
+from ..sources.pages import extract_links
 
 
 class StreamingPageIngestor:
@@ -66,8 +66,8 @@ class StreamingPageIngestor:
         newest ingested version of each url (href NULL for pages with no
         outlinks). Lazy reader over the current state dir: collect it (or
         localCheckpoint) before the next ``process_batch``, which garbage-
-        collects superseded state dirs; ``snapshot_graph`` returns an
-        eagerly-checkpointed graph for exactly that reason."""
+        collects superseded state dirs; ``snapshot_graph`` checkpoints
+        the state before its build for exactly that reason."""
         m = self._manifest()
         if m["links_dir"]:
             return self.spark.read.parquet(os.path.join(self.state_dir, m["links_dir"]))
@@ -150,22 +150,17 @@ class StreamingPageIngestor:
         """Canonical DiGraph over the current state — build_web_graph
         semantics (links to known urls only, self-links dropped, weight =
         duplicate-link count, dense vid remap by ascending url)."""
-        spark = self.spark
-        P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-        state = self.links()
+        # checkpointed first: the snapshot must stay valid after
+        # process_batch garbage-collects the state dir it was read from
+        state = self.links().localCheckpoint(eager=True)
         known = state.select("url").distinct()
         links = state.filter(F.col("href").isNotNull()).join(
             known.withColumnRenamed("url", "href"), "href", "left_semi"
         )
-        dedup = (
-            links.filter(F.col("url") != F.col("href"))
-            .groupBy("url", "href")
-            .agg(F.count("*").cast("double").alias("weight"))
+        rows = links.select(
+            F.col("url").alias("src"), F.col("href").alias("dst"), F.lit(1.0).alias("weight")
         )
-        # eager=True: the snapshot must stay valid after process_batch
-        # garbage-collects the state dir it was read from (a lazy persist
-        # would re-read deleted files)
-        return _string_keyed_digraph(dedup, "url", "href", P, eager=True)
+        return DiGraph._build(self.spark, rows, True, num_partitions)
 
 
 def streaming_page_ingest(page_stream: DataFrame, state_dir: str, checkpoint_dir: str):

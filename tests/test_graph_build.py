@@ -148,3 +148,87 @@ def test_bucketed_table_roundtrip_no_shuffle(spark, tmp_path):
     finally:
         spark.sql("DROP TABLE IF EXISTS algo28_edges")
         spark.sql("DROP TABLE IF EXISTS algo28_vertices")
+
+
+def _build_from_edges(spark, tmp_path):
+    return Graph.from_edges(spark, ALGO28_SRC, ALGO28_DST, ALGO28_WGT, num_partitions=4)
+
+
+def _build_digraph_from_edges(spark, tmp_path):
+    return DiGraph.from_edges(spark, ALGO28_SRC, ALGO28_DST, ALGO28_WGT, num_partitions=4)
+
+
+def _pages(spark):
+    from arkouda_njit_spark.sources import generate_pages
+
+    return generate_pages(spark, n_pages=60, links_per_page=4, seed=7)
+
+
+def _build_web_graph(spark, tmp_path):
+    from arkouda_njit_spark.sources import build_web_graph
+
+    return build_web_graph(_pages(spark), num_partitions=4)
+
+
+def _build_host_graph(spark, tmp_path):
+    from arkouda_njit_spark.sources.pages import build_host_graph
+
+    return build_host_graph(_pages(spark), num_partitions=4)
+
+
+def _snapshot_graph(spark, tmp_path):
+    from arkouda_njit_spark.streaming import StreamingPageIngestor
+
+    ing = StreamingPageIngestor(spark, str(tmp_path / "state"))
+    ing.process_batch(_pages(spark), epoch_id=0)
+    return ing.snapshot_graph(num_partitions=4)
+
+
+def _degree_sort_relabel(spark, tmp_path):
+    from arkouda_njit_spark.sources.files import degree_sort_relabel
+
+    return degree_sort_relabel(_build_from_edges(spark, tmp_path))
+
+
+def _graph_read(spark, tmp_path):
+    _build_from_edges(spark, tmp_path).write(str(tmp_path / "g"))
+    return Graph.read(spark, str(tmp_path / "g"), num_partitions=4)
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        _build_from_edges,
+        _build_digraph_from_edges,
+        _build_web_graph,
+        _build_host_graph,
+        _snapshot_graph,
+        _degree_sort_relabel,
+        _graph_read,
+    ],
+    ids=lambda f: f.__name__.lstrip("_"),
+)
+def test_edge_table_layout(spark, tmp_path, build):
+    """Every graph constructor yields the storage contract: edges (src, dst, weight),
+    each src in exactly one partition, rows sorted by (src, dst) within
+    each partition; the constructors that count their tables keep the counts."""
+    from pyspark.sql import functions as F
+
+    g = build(spark, tmp_path)
+    assert g.edges.columns == ["src", "dst", "weight"]
+    rows = g.edges.select(F.spark_partition_id().alias("pid"), "src", "dst").collect()
+    assert rows
+    parts: dict[int, list[tuple[int, int]]] = {}
+    home: dict[int, int] = {}
+    for pid, src, dst in rows:
+        parts.setdefault(pid, []).append((src, dst))
+        assert home.setdefault(src, pid) == pid, f"src {src} spans partitions"
+    assert len(parts) > 1
+    for pid, pairs in parts.items():
+        assert pairs == sorted(pairs), f"partition {pid} is not sorted by (src, dst)"
+    if build is not _graph_read:
+        assert g._n_vertices is not None and g._n_edges is not None
+        assert g._n_vertices == g.vertices.count()
+        n_rows = len(rows) if g.directed else len(rows) // 2
+        assert g._n_edges == n_rows
+    g.unpersist()
