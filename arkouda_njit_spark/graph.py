@@ -27,7 +27,12 @@ Spark-first design (SURVEY.md §1.4): a graph is a pair of DataFrames
 
 ``Graph._build`` is the one place that turns (src, dst, weight) rows into
 these tables, whatever the key type; ``_remap`` and ``_layout`` are the
-pieces the relabels and ``Graph.read`` share with it.
+pieces the relabels and ``Graph.read`` share with it. A build has one
+materialization rule: an intermediate it reads more than once (the dedup
+table, the dense rank's ordered labels) is a lazy ``localCheckpoint``,
+freed with its last reference; only the tables a ``Graph`` owns (edges,
+vertices, degrees) are persisted, and ``Graph.unpersist`` frees them all.
+The key type picks the vertex schema and nothing else.
 
 The CSR ``SEGMENTS`` arrays are NOT materialized: per-vertex adjacency is
 recovered by hash partitioning + sort, and every kernel is a join/agg over
@@ -44,7 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 from .plans.joins import BROADCAST_MAX_VERTICES
-from .plans.partitioning import dense_rank_ids_counted
+from .plans.partitioning import dense_rank_ids
 
 
 def _remap(
@@ -193,16 +198,13 @@ class Graph:
             raw = raw.filter(F.col("src") != F.col("dst"))
 
         # Dedup; duplicate weights sum-aggregated — graphclass.py:192-196.
-        # Held: the canonical pair set feeds three consumers (label
-        # extraction, the range-partitioner sampling pass of the dense
-        # remap, and the remap joins) — without it the dedup shuffle
-        # re-executes for each. String keys come from Arrow link
-        # extraction: a checkpoint keeps that pass out of every downstream
-        # plan, which AQE otherwise re-renders on each stage update (~2-3 s
-        # of driver time per triangle_count on a 16k-page crawl, 4 vCPUs).
-        # Integer builds persist and free the table below: a checkpoint
-        # there broke a self-join in the SCC/bow-tie query ("Failure when
-        # resolving conflicting references in Join").
+        # The canonical pair set feeds three consumers (label extraction,
+        # the dense rank's range-partitioner sampling pass, and the remap
+        # joins), so it is a lazy checkpoint, like every intermediate the
+        # build reads more than once: the dedup shuffle runs once, and the
+        # plans downstream stop at the checkpoint leaf (a web graph's Arrow
+        # link extraction is not re-rendered by AQE on each stage update).
+        # Only the tables the Graph owns are persisted.
         dedup = raw.groupBy("src", "dst").agg(F.sum("weight").alias("weight"))
         if not cls.directed and not no_self_loops:
             # symmetrize+sum doubled a kept loop's weight (both mirrored
@@ -213,7 +215,7 @@ class Graph:
                     F.col("src") == F.col("dst"), F.col("weight") * 2
                 ).otherwise(F.col("weight")),
             )
-        dedup = dedup.localCheckpoint(eager=False) if key == "url" else dedup.persist()
+        dedup = dedup.localCheckpoint(eager=False)
 
         # Dense vertex remap, ascending original label — graphclass.py:213-223.
         # Scalable two-pass dense rank (no single-partition window): see
@@ -225,7 +227,7 @@ class Graph:
             .unionAll(dedup.select(F.col("dst").alias(key)))
             .distinct()
         )
-        vertices, n_vertices = dense_rank_ids_counted(labels, key, P, out_col="vid")
+        vertices, n_vertices = dense_rank_ids(labels, key, P, out_col="vid")
         if key == "url":
             vertices = vertices.select("vid", F.col("vid").alias("label"), "url")
         vertices = vertices.repartition(P, "vid").persist()
@@ -244,8 +246,7 @@ class Graph:
                 )
             )
         edges = _layout(remapped, P)
-        total = edges.count()  # materialize the canonical table; free dedup
-        dedup.unpersist()
+        total = edges.count()  # materialize the canonical table
         # n_edges comes free from the materialization count whenever the
         # loop count is known by construction (loops were filtered, or the
         # table is directed) — the old lazy property re-ran a filter+count

@@ -303,7 +303,7 @@ def triangles(graph: Graph, vertices: list[int] | None = None):
     # vertices array, so the output aligns with the SURVIVING labels)
     from ..plans.partitioning import dense_rank_ids
 
-    pos = dense_rank_ids(
+    pos, _ = dense_rank_ids(
         got.select("in_pos").distinct(), "in_pos", graph.num_partitions, out_col="pos"
     )
     return got.join(pos, "in_pos").select("pos", "node", "triangles")

@@ -455,7 +455,7 @@ def well_connected_components(
     from ..plans.partitioning import dense_rank_ids
 
     P = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    ids = dense_rank_ids(
+    ids, _ = dense_rank_ids(
         raw.select("cluster_min").distinct(), "cluster_min", P, out_col="cluster"
     )
     return raw.join(ids, "cluster_min").select(

@@ -1,11 +1,9 @@
 from .iterate import FixpointLoop, count_changed, l1_diff
-from .partitioning import dense_rank_ids, two_stage_min, with_salt
+from .partitioning import dense_rank_ids
 
 __all__ = [
     "FixpointLoop",
     "count_changed",
     "l1_diff",
     "dense_rank_ids",
-    "with_salt",
-    "two_stage_min",
 ]

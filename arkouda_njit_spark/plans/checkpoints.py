@@ -27,6 +27,17 @@ inflated product. Kernels simply call ``localCheckpoint``. Join-strategy
 quality is unaffected for these kernels: the state side's strategy is
 pinned explicitly by a join hint, not left to size estimates.
 
+The rebuilt leaf is also a new relation: fresh attribute ids
+(``newInstance``) and no recorded partitioning or ordering. With the
+source plan's ids, a join that reaches ``vid`` through a checkpoint on one
+side and through the dense rank's ``mapInPandas`` on the other fails
+analysis ("Failure when resolving conflicting references in Join"). A
+recorded layout (Spark keeps one with AQE off, as ``__spark_entry__._tune``
+sets) holds attribute ids that canonicalization does not normalize, so the
+copy the analyzer renews in a self-join stops matching cached tables built
+over the leaf and recomputes them: a whole graph build per self-join of
+``graph.edges`` (triangle count, 301 vertices, 4 vCPUs: 3 s → 55 s).
+
 The rebuild touches JVM internals (`LogicalRDD`'s constructor via py4j),
 pinned by tests to the installed pyspark; if the internals ever move, the
 helper degrades to the plain checkpoint (correct, just exposed to the
@@ -51,8 +62,8 @@ def wrap_local_checkpoint() -> None:
     site is a latent multi-minute optimizer stall that only shows up at
     high iteration counts. Wrapping the classic ``DataFrame.localCheckpoint``
     once (called from the package ``__init__``) applies the strip uniformly
-    — semantics are unchanged, only the leaf's *estimated* Statistics are
-    reset, and AQE still re-plans from real runtime sizes at shuffle
+    — semantics are unchanged, only the leaf's *estimated* Statistics and
+    recorded layout are reset, and AQE still re-plans from real runtime sizes at shuffle
     boundaries. Connect-mode DataFrames are untouched (no local JVM plan).
     Idempotent; falls back to the unwrapped behavior if Spark's internals
     move.
@@ -95,18 +106,20 @@ def _strip_origin_stats(ck: DataFrame) -> DataFrame:
     plan = ck._jdf.queryExecution().logical()  # type: ignore[attr-defined]
     if plan.getClass().getSimpleName() != "LogicalRDD":
         return ck
+    # rebuilt without inherited stats or layout, under fresh attribute ids
     none = getattr(getattr(jvm.scala, "None$"), "MODULE$")
+    nil = getattr(getattr(jvm.scala.collection.immutable, "Nil$"), "MODULE$")
     bare = jvm.org.apache.spark.sql.execution.LogicalRDD(
         plan.output(),
         plan.rdd(),
-        plan.outputPartitioning(),
-        plan.outputOrdering(),
+        jvm.org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning(0),
+        nil,  # outputOrdering
         plan.isStreaming(),
         plan.stream(),
         spark._jsparkSession,  # type: ignore[attr-defined]
         none,  # originStats
         none,  # originConstraints
-    )
+    ).newInstance()
     dataset_companion = getattr(
         getattr(jvm.org.apache.spark.sql.classic, "Dataset$"), "MODULE$"
     )

@@ -1,4 +1,4 @@
-"""Partitioning utilities: scalable dense-rank ids, hub salting.
+"""Partitioning utilities: scalable dense-rank ids, input parallelism.
 
 The reference remaps vertex labels to dense 0..n-1 ids with a sort-based
 GroupBy + broadcast (graphclass.py:213-223). A naive Spark translation is
@@ -22,27 +22,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def dense_rank_ids(df: DataFrame, col: str, num_partitions: int, out_col: str = "vid") -> DataFrame:
-    """Assign dense ids 0..n-1 in ascending ``col`` order, scalably.
-
-    ``df`` must contain distinct values of ``col``. Returns (out_col, col).
-    """
-    return dense_rank_ids_counted(df, col, num_partitions, out_col)[0]
-
-
-def dense_rank_ids_counted(
+def dense_rank_ids(
     df: DataFrame, col: str, num_partitions: int, out_col: str = "vid"
 ) -> tuple[DataFrame, int]:
-    """:func:`dense_rank_ids` plus the total row count, which the two-pass
-    scheme computes anyway (sum of the per-partition counts) — callers that
-    need n for a broadcast-vs-shuffle decision get it for free instead of
-    paying a separate count action."""
+    """Assign dense ids 0..n-1 in ascending ``col`` order, scalably.
+
+    ``df`` must contain distinct values of ``col``. Returns the
+    (out_col, col) table and n, the sum of the per-partition counts the
+    two-pass scheme computes anyway, so callers that need n (a
+    broadcast-vs-shuffle decision) pay no separate count action.
+
+    The ordered labels are read twice (the count pass and the id pass), so
+    they are a lazy ``localCheckpoint``: the count job materializes them,
+    and they are freed with the last reference to the returned table, not
+    left in the session cache."""
     spark = df.sparkSession
     ordered = (
         df.select(col)
         .repartitionByRange(num_partitions, F.col(col))
         .sortWithinPartitions(col)
-        .persist()
+        .localCheckpoint(eager=False)
     )
     # Pass 1: per-partition counts (tiny result: one row per partition).
     counts = (
@@ -101,22 +100,3 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     if current >= target:
         return df
     return df.repartition(target)
-
-
-def with_salt(df: DataFrame, key: str, salt_buckets: int, salt_col: str = "_salt") -> DataFrame:
-    """Deterministic salt column for skewed-key mitigation (north rule):
-    spread a hot ``key`` over ``salt_buckets`` sub-keys. Pair with a
-    two-stage aggregation (partial agg on (key, salt), final on key)."""
-    return df.withColumn(
-        salt_col, F.pmod(F.xxhash64(key, F.monotonically_increasing_id()), F.lit(salt_buckets))
-    )
-
-
-def two_stage_min(df: DataFrame, key: str, value: str, salt_buckets: int) -> DataFrame:
-    """Salted two-stage min-aggregation: groupBy(key, salt) partial min,
-    then groupBy(key) final min. Spark already map-side-combines min, but
-    the explicit form bounds reducer skew for power-law hubs where one key
-    holds a large fraction of all rows (SURVEY.md §4)."""
-    salted = df.withColumn("_salt", F.pmod(F.xxhash64(value), F.lit(salt_buckets)))
-    partial = salted.groupBy(key, "_salt").agg(F.min(value).alias(value))
-    return partial.groupBy(key).agg(F.min(value).alias(value))

@@ -208,7 +208,7 @@ def degree_sort_relabel(graph):
             F.col("degree").alias("d"), F.col("label").alias("l"), F.col("vid").alias("v")
         ).alias("k")
     )
-    ranked = dense_rank_ids(keyed, "k", graph.num_partitions, out_col="new")
+    ranked, _ = dense_rank_ids(keyed, "k", graph.num_partitions, out_col="new")
     return _apply_relabel(
         graph, ranked.select(F.col("k.v").alias("vid"), "new")
     )
@@ -252,7 +252,7 @@ def rcm_relabel(graph, start: int | None = None):
             ).alias("k")
         )
     )
-    cm = dense_rank_ids(keyed, "k", graph.num_partitions, out_col="cm")
+    cm, _ = dense_rank_ids(keyed, "k", graph.num_partitions, out_col="cm")
     deg.unpersist()
     return _apply_relabel(
         graph,

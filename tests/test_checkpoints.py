@@ -86,3 +86,47 @@ def test_lazy_checkpoint(spark):
     lz = df.localCheckpoint(eager=False)
     assert lz.count() == 100
     assert sorted(r["v"] for r in lz.collect()) == list(range(100))
+
+
+def _output_expr_ids(df) -> set[int]:
+    out = df._jdf.queryExecution().analyzed().output()
+    return {out.apply(i).exprId().id() for i in range(out.size())}
+
+
+def test_checkpoint_has_fresh_attribute_ids(spark):
+    """A checkpoint is a new relation: its output attributes carry ids of
+    their own, so joining it back to its source plan analyzes (with the
+    source plan's ids the join fails to resolve conflicting references)."""
+    df = spark.range(20).select(
+        F.col("id").alias("k"), (F.col("id") * 3).alias("v")
+    )
+    ck = df.localCheckpoint()
+    assert not _output_expr_ids(ck) & _output_expr_ids(df)
+    got = sorted(map(tuple, ck.join(df, "k").collect()))
+    assert got == [(k, 3 * k, 3 * k) for k in range(20)]
+
+
+def test_checkpoint_leaf_matches_cache_in_self_union(spark):
+    """With AQE off, Spark records the checkpointed plan's partitioning and
+    ordering on the leaf, and plan canonicalization keeps their attribute
+    ids: the analyzer's renewed copy of the leaf in a self-union then no
+    longer matches a cached plan built on it, and that branch recomputes.
+    The rebuilt leaf records no layout, so both branches read the cache."""
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        ck = (
+            spark.range(100)
+            .repartition(4, "id")
+            .sortWithinPartitions("id")
+            .localCheckpoint()
+        )
+        cached = ck.select((F.col("id") * 2).alias("v")).persist()
+        both = cached.unionAll(cached)
+        leaves = both._jdf.queryExecution().withCachedData().collectLeaves()
+        names = [leaves.apply(i).nodeName() for i in range(leaves.size())]
+        assert names == ["InMemoryRelation", "InMemoryRelation"], names
+        assert both.count() == 200
+        cached.unpersist()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)

@@ -187,11 +187,16 @@ def _snapshot_graph(spark, tmp_path):
 def _degree_sort_relabel(spark, tmp_path):
     from arkouda_njit_spark.sources.files import degree_sort_relabel
 
-    return degree_sort_relabel(_build_from_edges(spark, tmp_path))
+    source = _build_from_edges(spark, tmp_path)
+    g = degree_sort_relabel(source)
+    source.unpersist()
+    return g
 
 
 def _graph_read(spark, tmp_path):
-    _build_from_edges(spark, tmp_path).write(str(tmp_path / "g"))
+    source = _build_from_edges(spark, tmp_path)
+    source.write(str(tmp_path / "g"))
+    source.unpersist()
     return Graph.read(spark, str(tmp_path / "g"), num_partitions=4)
 
 
@@ -211,9 +216,12 @@ def _graph_read(spark, tmp_path):
 def test_edge_table_layout(spark, tmp_path, build):
     """Every graph constructor yields the storage contract: edges (src, dst, weight),
     each src in exactly one partition, rows sorted by (src, dst) within
-    each partition; the constructors that count their tables keep the counts."""
+    each partition; the constructors that count their tables keep the counts;
+    ``unpersist`` frees everything the build cached."""
     from pyspark.sql import functions as F
 
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached_before = cache.cachedData().size()
     g = build(spark, tmp_path)
     assert g.edges.columns == ["src", "dst", "weight"]
     rows = g.edges.select(F.spark_partition_id().alias("pid"), "src", "dst").collect()
@@ -232,3 +240,4 @@ def test_edge_table_layout(spark, tmp_path, build):
         n_rows = len(rows) if g.directed else len(rows) // 2
         assert g._n_edges == n_rows
     g.unpersist()
+    assert cache.cachedData().size() == cached_before

@@ -174,3 +174,17 @@ def test_exhausted_rounds_raise_instead_of_dropping(spark):
 
     with _pytest.raises(RuntimeError, match="did not assign"):
         strongly_connected_components(g, max_rounds=0)
+
+
+def test_web_graph_scc_and_bowtie(spark):
+    """A web graph (string keys, checkpointed build) through SCC and the
+    bow-tie map: its vertex table reaches ``vid`` through the dense rank's
+    ``mapInPandas`` while the BFS frontiers reach it through checkpoints."""
+    from arkouda_njit_spark.operators import bowtie_decomposition
+    from arkouda_njit_spark.sources import build_web_graph, generate_pages
+
+    g = build_web_graph(generate_pages(spark, n_pages=300, links_per_page=4, seed=3))
+    edges = [(r["src"], r["dst"]) for r in g.edges.collect()]
+    assert _partition(g) == _nx_partition(nx.DiGraph(edges))
+    got = {r["vid"]: r["region"] for r in bowtie_decomposition(g).collect()}
+    assert got == TestBowtie._oracle(edges)
