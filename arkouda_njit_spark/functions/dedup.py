@@ -451,38 +451,35 @@ def dedup_clusters(
     group (transitive closure — if a~b and b~c, all three share one
     cluster even when a~c was never scored).
 
-    The kernel is the engine's hash-min connected components
-    (operators/connected_components.py) over the pair graph — the pair
-    table IS an edge list, and dedup clustering at corpus scale is
-    exactly the CC problem, so all of its scale discipline (map-side min
-    combine, checkpointed fixpoint, one action per round) is inherited.
+    The pair table IS an edge list, and dedup clustering at corpus scale
+    is exactly the CC problem: the engine's hash-min kernel
+    (operators/connected_components.hash_min_labels) runs directly on the
+    raw doc ids, so each doc's final label is already its group's smallest
+    doc_id — no vertex-id remap, no graph build.
     """
-    from ..graph import Graph
-    from ..operators.connected_components import connected_components
+    from ..operators.connected_components import hash_min_labels, symmetric_edges
 
-    spark = pairs.sparkSession
-    edges = (
+    # The checkpoint in symmetric_edges is also the lineage cut before the
+    # iterative kernel: `pairs` usually arrives as the whole LSH candidate
+    # pipeline, and without it every AQE re-plan inside the fixpoint
+    # re-canonicalizes that full tree driver-side each round. The pair
+    # table is the near-dup candidate set — tiny next to the corpus — so
+    # materializing it is free.
+    sym = symmetric_edges(
         pairs.select(
             F.col(a_col).cast("long").alias("src"),
             F.col(b_col).cast("long").alias("dst"),
-            F.lit(1.0).alias("weight"),
-        )
-    ).localCheckpoint(eager=True)
-    # Lineage cut before the iterative kernel: `pairs` usually arrives as
-    # the whole LSH candidate pipeline, and without the checkpoint every
-    # AQE re-plan inside the CC fixpoint re-canonicalizes that full tree
-    # driver-side each round (pure planning cost, grows with pipeline
-    # depth). The pair table is the near-dup candidate set — tiny next to
-    # the corpus — so materializing it is free.
-    g = Graph.from_edges(spark, edges, no_self_loops=False)
-    comp = connected_components(g)
-    labels = g.vertices.select("vid", F.col("label").alias("doc_id"))
-    return (
-        comp.join(labels, "vid")
-        .withColumn(
-            "cluster", F.min("doc_id").over(Window.partitionBy("component"))
-        )
-        .select("doc_id", "cluster")
+        ),
+        directed=True,
+    )
+    # the symmetric row count bounds the doc count and the rounds needed
+    n = sym.count()
+    docs = (
+        sym.select(F.col("src").alias("vid")).distinct()
+        .withColumn("component", F.col("vid"))
+    )
+    return hash_min_labels(sym, docs, n, max_iterations=n).select(
+        F.col("vid").alias("doc_id"), F.col("component").alias("cluster")
     )
 
 

@@ -17,6 +17,11 @@ Label convention matches the reference exactly: the final component label is
 the minimum internal vertex id in the component (dense ids assigned in
 ascending original-label order), e.g. components {0..6},{7,8,9},{10,11,12}
 → labels [0,7,10] (algorithm_test.py:272-285).
+
+:func:`hash_min_labels` is the engine's only hash-min loop. Besides
+:func:`connected_components` it serves streaming CC (merge graph of
+component labels), WCC (components within each piece key) and dedup
+clustering (raw document ids), each over a :func:`symmetric_edges` table.
 """
 
 from __future__ import annotations
@@ -29,6 +34,90 @@ from ..plans.iterate import FixpointLoop, count_changed
 from ..plans.joins import BROADCAST_MAX_VERTICES
 
 
+def symmetric_edges(
+    edges: DataFrame, directed: bool, keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """The ``(*keys, src, dst)`` projection of ``edges``, with the reversed
+    rows added when ``directed``, checkpointed for the loop's per-round scans.
+
+    The checkpoint matters: the loop scans this table every round and the
+    canonical table's columnar-cache decode was a measurable per-round cost
+    (r6: 4.2 -> 3.2 s for sf0.1 CC; the one-time checkpoint pass amortizes
+    over the rounds)."""
+    sym = edges.select(*keys, "src", "dst")
+    if directed:
+        sym = sym.unionAll(
+            edges.select(*keys, F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+    return sym.localCheckpoint(eager=True)
+
+
+def hash_min_labels(
+    edges: DataFrame,
+    labels: DataFrame,
+    n_vertices: int,
+    keys: tuple[str, ...] = (),
+    max_iterations: int = 100,
+    checkpoint_dir: str | None = None,
+) -> DataFrame:
+    """Fixpoint of hash-min + pointer jumping: ``(*keys, vid, component)``.
+
+    ``edges`` is a symmetric ``(*keys, src, dst)`` table and ``labels`` the
+    initial ``(*keys, vid, component)`` state; labels only flow between rows
+    with equal ``keys``. ``n_vertices`` is an upper bound on the state's
+    size and picks the jump join's strategy. An in-memory run that reaches
+    ``max_iterations`` with labels still changing raises ``RuntimeError``
+    rather than return half-merged labels; a durable run (``checkpoint_dir``
+    set) stops there and resumes from its last epoch on the next call."""
+
+    def step(state: DataFrame, i: int) -> DataFrame:
+        # 1. Hash-min exchange: neighbor labels flow along edges.
+        # State join strategy: shuffle_hash unconditionally — the former
+        # small-graph broadcast paid a driver collect + broadcast build per
+        # round (r6: 4.4-5.1 -> 3.0-3.8 s on sf0.1 CC).
+        nbr = (
+            edges.join(
+                state.withColumnRenamed("vid", "src").hint("shuffle_hash"),
+                [*keys, "src"],
+            )
+            .select(*keys, F.col("dst").alias("vid"), "component")
+        )
+        exchanged = (
+            state.unionAll(nbr)
+            .groupBy(*keys, "vid")
+            .agg(F.min("component").alias("component"))
+        )
+        # 2. Pointer jumping: component := component(component) compresses
+        #    label chains (the reference's path-halving, Diameter.chpl:33-49).
+        parent = exchanged.select(
+            *keys, F.col("vid").alias("component"), F.col("component").alias("grand")
+        )
+        if n_vertices <= BROADCAST_MAX_VERTICES:
+            # Broadcasting the V-sized parent map keeps the groupBy's
+            # hash(vid) partitioning through the join instead of shuffling
+            # both sides (guide §2.4; r6 measured 4.1-5.5 s -> 3.6-4.4 s on
+            # sf0.1 CC).
+            parent = parent.hint("broadcast")
+        return exchanged.join(parent, [*keys, "component"]).select(
+            *keys, "vid", F.col("grand").alias("component")
+        )
+
+    loop = FixpointLoop(
+        "connected_components",
+        step,
+        convergence=count_changed([*keys, "vid"], "component"),
+        max_iterations=max_iterations,
+        tol=0.0,
+        checkpoint_dir=checkpoint_dir,
+    )
+    out = loop.run(labels)
+    if checkpoint_dir is None and loop.metrics and loop.metrics[-1].changed > 0:
+        raise RuntimeError(
+            f"hash-min labels still changing after {max_iterations} iterations"
+        )
+    return out
+
+
 def connected_components(
     graph: Graph,
     checkpoint_dir: str | None = None,
@@ -39,83 +128,14 @@ def connected_components(
     The component id is the minimum internal vid of the component
     (ConnectedComponents.chpl semantics).
     """
-    P = graph.num_partitions
-
     # Undirected semantics regardless of graph direction (reference treats
     # the graph as symmetric via the reversed arrays).
-    #
-    # The per-kernel (src, dst) projection is localCheckpointed: the loop
-    # scans it every round and the canonical table's columnar-cache decode
-    # was a measurable per-round cost (r6: 4.2 -> 3.2 s for sf0.1 CC with
-    # the checkpointed projection; the one-time checkpoint pass amortizes
-    # over the rounds). The canonical edge table itself stays persisted.
-    if graph.directed:
-        edges = (
-            graph.edges.select("src", "dst")
-            .unionAll(
-                graph.edges.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst")
-                )
-            )
-            .repartition(P, "src")
-        ).localCheckpoint(eager=True)
-    else:
-        edges = graph.edges.select("src", "dst").localCheckpoint(eager=True)
-
+    edges = symmetric_edges(graph.edges, graph.directed)
     init = graph.vertices.select("vid", F.col("vid").alias("component"))
-
-    def step(state: DataFrame, i: int) -> DataFrame:
-        # 1. Hash-min exchange: neighbor labels flow along edges.
-        #    edges is hash-partitioned by src and state by vid with the same
-        #    partition count, so the join reuses the cached edge partitioning.
-        # State join strategy: shuffle_hash unconditionally — only the
-        # V-sized state side moves (the edge side keeps its hash(src)
-        # layout) and the former small-graph broadcast paid a driver
-        # collect + broadcast build per round (r6: 4.4-5.1 -> 3.0-3.8 s
-        # on sf0.1 CC).
-        nbr = (
-            edges.join(
-                state.withColumnRenamed("vid", "src").hint("shuffle_hash"), "src"
-            )
-            .select(F.col("dst").alias("vid"), "component")
-        )
-        exchanged = (
-            state.unionAll(nbr)
-            .groupBy("vid")
-            .agg(F.min("component").alias("component"))
-        )
-        # 2. Pointer jumping: component := component(component) compresses
-        #    label chains (the reference's path-halving, Diameter.chpl:33-49).
-        parent = exchanged.select(
-            F.col("vid").alias("component"), F.col("component").alias("grand")
-        )
-        if graph.n_vertices <= BROADCAST_MAX_VERTICES:
-            # Broadcast-state regime: the jump join broadcasts the V-sized
-            # parent map, so the groupBy's hash(vid) partitioning survives
-            # the join and the final repartition is unnecessary — the old
-            # shape paid THREE extra exchanges per round (jump self-join
-            # both sides + repartition) for a co-partitioning that only
-            # the shuffle_hash regime consumes (guide §2.4; r6 measured
-            # 4.1-5.5 s -> 3.6-4.4 s on sf0.1 CC).
-            return (
-                exchanged.join(parent.hint("broadcast"), "component")
-                .select("vid", F.col("grand").alias("component"))
-            )
-        jumped = (
-            exchanged.join(parent, "component")
-            .select("vid", F.col("grand").alias("component"))
-        )
-        return jumped.repartition(P, "vid")
-
-    loop = FixpointLoop(
-        "connected_components",
-        step,
-        convergence=count_changed("vid", "component"),
-        max_iterations=max_iterations,
-        tol=0.0,
+    return hash_min_labels(
+        edges, init, graph.n_vertices, max_iterations=max_iterations,
         checkpoint_dir=checkpoint_dir,
     )
-    return loop.run(init)
 
 
 def component_sizes(components: DataFrame) -> DataFrame:

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.iterate import FixpointLoop
+from ..plans.iterate import FixpointLoop, l1_diff
 
 
 def eigenvector_centrality(
@@ -68,19 +68,10 @@ def eigenvector_centrality(
             .alias("x"),
         )
 
-    def l1(old: DataFrame, new: DataFrame) -> float:
-        row = (
-            old.select("vid", F.col("x").alias("x0"))
-            .join(new, "vid")
-            .agg(F.sum(F.abs(F.col("x") - F.col("x0"))).alias("d"))
-            .collect()[0]
-        )
-        return float(row["d"] or 0.0)
-
     loop = FixpointLoop(
         "eigenvector",
         step,
-        convergence=l1 if tol > 0 else None,
+        convergence=l1_diff("vid", "x") if tol > 0 else None,
         max_iterations=max_iterations,
         tol=n * tol,
         checkpoint_dir=checkpoint_dir,

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import DiGraph
-from ..plans.iterate import FixpointLoop
+from ..plans.iterate import FixpointLoop, l1_diff
 
 
 def hits(
@@ -81,21 +81,10 @@ def hits(
         hub = _normalized(hf, "hub")
         return hub.join(auth, "vid").select("vid", "hub", "auth")
 
-    def l1_both(old: DataFrame, new: DataFrame) -> float:
-        j = old.select("vid", F.col("hub").alias("h0"), F.col("auth").alias("a0")).join(
-            new, "vid"
-        )
-        row = j.agg(
-            F.sum(
-                F.abs(F.col("hub") - F.col("h0")) + F.abs(F.col("auth") - F.col("a0"))
-            ).alias("d")
-        ).collect()[0]
-        return float(row["d"] or 0.0)
-
     loop = FixpointLoop(
         "hits",
         step,
-        convergence=l1_both if tol > 0 else None,
+        convergence=l1_diff("vid", "hub", "auth") if tol > 0 else None,
         max_iterations=max_iterations,
         tol=tol,
         checkpoint_dir=checkpoint_dir,

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.iterate import FixpointLoop
+from ..plans.iterate import FixpointLoop, l1_diff
 
 
 def katz_centrality(
@@ -58,21 +58,12 @@ def katz_centrality(
             (F.lit(alpha) * F.coalesce("c", F.lit(0.0)) + F.lit(beta)).alias("x"),
         )
 
-    def l1(old: DataFrame, new: DataFrame) -> float:
-        row = (
-            old.select("vid", F.col("x").alias("x0"))
-            .join(new, "vid")
-            .agg(F.sum(F.abs(F.col("x") - F.col("x0"))).alias("d"))
-            .collect()[0]
-        )
-        return float(row["d"] or 0.0)
-
     # tol <= 0: exactly max_iterations updates with no convergence job
     # (the replayable fixed-iteration mode the driver oracle uses)
     loop = FixpointLoop(
         "katz",
         step,
-        convergence=l1 if tol > 0 else None,
+        convergence=l1_diff("vid", "x") if tol > 0 else None,
         max_iterations=max_iterations,
         # nx stops when L1 change < n * tol
         tol=float(n) * tol,

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..graph import Graph
 from ..plans.iterate import FixpointLoop, count_changed
+from .connected_components import symmetric_edges
 
 
 def label_propagation(
@@ -31,24 +32,7 @@ def label_propagation(
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Per-vertex community labels: DataFrame (vid, label)."""
-    P = graph.num_partitions
-
-    # Per-kernel checkpointed (src, dst) projection — same rationale and
-    # measurement as connected_components (r6: avoids the canonical
-    # table's columnar-cache decode on every round).
-    if graph.directed:
-        edges = (
-            graph.edges.select("src", "dst")
-            .unionAll(
-                graph.edges.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst")
-                )
-            )
-            .repartition(P, "src")
-        ).localCheckpoint(eager=True)
-    else:
-        edges = graph.edges.select("src", "dst").localCheckpoint(eager=True)
-
+    edges = symmetric_edges(graph.edges, graph.directed)
     init = graph.vertices.select("vid", F.col("vid").alias("label"))
 
     def step(state: DataFrame, i: int) -> DataFrame:

@@ -34,6 +34,7 @@ Common-Crawl-scale link-graph engine is expected to ship.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame
@@ -86,7 +87,9 @@ def spam_mass(
     mass/PR, clamped to 0 where PR is 0 (an isolated vertex holds only
     teleport mass, all of it accounted). The transition table is
     prepared once and shared by both power iterations — the second loop
-    adds no scan or degree aggregation, only its own rank exchanges."""
+    adds no scan or degree aggregation, only its own rank exchanges.
+    With ``checkpoint_dir`` set, the two loops keep their epochs apart in
+    ``<checkpoint_dir>/pagerank`` and ``<checkpoint_dir>/trustrank``."""
     seeds = [int(v) for v in trusted]
     if not seeds:
         raise ValueError("spam_mass needs a non-empty trusted seed set")
@@ -100,7 +103,7 @@ def spam_mass(
             tol=tol,
             max_iterations=max_iterations,
             weight=weight,
-            checkpoint_dir=checkpoint_dir,
+            checkpoint_dir=checkpoint_dir and os.path.join(checkpoint_dir, "pagerank"),
             prepared=prepared,
         )
         tr = trustrank(
@@ -110,7 +113,7 @@ def spam_mass(
             tol=tol,
             max_iterations=max_iterations,
             weight=weight,
-            checkpoint_dir=checkpoint_dir,
+            checkpoint_dir=checkpoint_dir and os.path.join(checkpoint_dir, "trustrank"),
             prepared=prepared,
         )
     finally:

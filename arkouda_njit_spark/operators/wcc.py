@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .connected_components import hash_min_labels, symmetric_edges
+
 CRITERIA = {
     "log10": lambda n, mult: __import__("math").floor(__import__("math").log10(n)) if n > 0 else 0,
     "log2": lambda n, mult: __import__("math").floor(__import__("math").log2(n)) if n > 0 else 0,
@@ -84,39 +86,19 @@ def _criterion_col(name: str, n, mult: float):
     return F.floor(F.lit(mult) * n)
 
 
-def _cc_per_piece(edges: DataFrame, max_iterations: int = 40) -> DataFrame:
-    """(pk, vid, comp): hash-min connected components within each piece key
-    ``pk`` of a (pk, src, dst) edge table — fully distributed."""
-    sym = edges.select("pk", "src", "dst").unionAll(
-        edges.select("pk", F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+def _cc_per_piece(edges: DataFrame) -> DataFrame:
+    """(pk, vid, component): connected components within each piece key
+    ``pk`` of a (pk, src, dst) edge table — the engine's hash-min kernel
+    (operators/connected_components.hash_min_labels) keyed by ``pk``. The
+    symmetric row count 2m bounds both the state size and the rounds
+    needed (a component with m edges settles within m + 1 rounds)."""
+    sym = symmetric_edges(edges, directed=True, keys=("pk",))
+    n = sym.count()
     state = (
         sym.select("pk", F.col("src").alias("vid")).distinct()
-        .withColumn("comp", F.col("vid"))
-        .localCheckpoint(eager=True)
+        .withColumn("component", F.col("vid"))
     )
-    for _ in range(max_iterations):
-        nbr = sym.join(
-            state.select("pk", F.col("vid").alias("src"), "comp"), ["pk", "src"]
-        ).select("pk", F.col("dst").alias("vid"), "comp")
-        exchanged = (
-            state.unionAll(nbr).groupBy("pk", "vid").agg(F.min("comp").alias("comp"))
-        )
-        parent = exchanged.select(
-            "pk", F.col("vid").alias("comp"), F.col("comp").alias("grand")
-        )
-        jumped = exchanged.join(parent, ["pk", "comp"]).select(
-            "pk", "vid", F.col("grand").alias("comp")
-        ).localCheckpoint(eager=True)
-        changed = (
-            jumped.join(state.withColumnRenamed("comp", "old"), ["pk", "vid"])
-            .filter(F.col("comp") != F.col("old"))
-            .count()
-        )
-        state = jumped
-        if changed == 0:
-            break
-    return state
+    return hash_min_labels(sym, state, n, keys=("pk",), max_iterations=n)
 
 
 def _mini_lpa(edges: DataFrame, rounds: int = 8) -> DataFrame:
@@ -194,8 +176,8 @@ def _wcc_distributed(
             break
         comp = _cc_per_piece(work)
         work = (
-            work.join(comp.select("pk", F.col("vid").alias("src"), "comp"), ["pk", "src"])
-            .select(F.concat_ws("_", "pk", "comp").alias("pk"), "src", "dst")
+            work.join(comp.select("pk", F.col("vid").alias("src"), "component"), ["pk", "src"])
+            .select(F.concat_ws("_", "pk", "component").alias("pk"), "src", "dst")
             .localCheckpoint(eager=True)
         )
         deg = (

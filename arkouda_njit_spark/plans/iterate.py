@@ -50,9 +50,12 @@ class IterationMetrics:
     partition_rows: dict[int, int] = field(default_factory=dict)
 
 
-def count_changed(key: str, col: str) -> Callable[[DataFrame, DataFrame], float]:
+def count_changed(
+    key: str | list[str], col: str
+) -> Callable[[DataFrame, DataFrame], float]:
     """Convergence metric: number of rows whose ``col`` differs between
-    consecutive states (the reference's CAS change counter)."""
+    consecutive states (the reference's CAS change counter). ``key`` is one
+    column name or a list of them."""
 
     def metric(prev: DataFrame, cur: DataFrame) -> float:
         return float(
@@ -65,14 +68,16 @@ def count_changed(key: str, col: str) -> Callable[[DataFrame, DataFrame], float]
     return metric
 
 
-def l1_diff(key: str, col: str) -> Callable[[DataFrame, DataFrame], float]:
-    """Convergence metric: sum of |cur.col - prev.col| (PageRank L1 error)."""
+def l1_diff(key: str, *cols: str) -> Callable[[DataFrame, DataFrame], float]:
+    """Convergence metric: sum over rows and ``cols`` of |cur.col - prev.col|
+    (PageRank's L1 error; HITS and SALSA pass both score columns)."""
 
     def metric(prev: DataFrame, cur: DataFrame) -> float:
+        terms = [F.abs(F.col(f"n.{c}") - F.col(f"o.{c}")) for c in cols]
         v = (
             cur.alias("n")
             .join(prev.alias("o"), key)
-            .agg(F.sum(F.abs(F.col(f"n.{col}") - F.col(f"o.{col}"))))
+            .agg(F.sum(sum(terms[1:], terms[0])))
             .collect()[0][0]
         )
         return float(v or 0.0)

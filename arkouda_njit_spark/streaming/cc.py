@@ -13,9 +13,10 @@ reasoning in relational form:
     one row per touched component pair, collapsed by distinct(), so the
     merge graph is bounded by the number of components the batch
     touches, never by batch size (and never collected to the driver);
-  * a hash-min fixpoint with pointer jumping on the merge graph (a
-    CONTRACTED graph, typically tiny and shallow) yields
-    old-label → new-root; one left join applies it to the state.
+  * the engine's hash-min kernel (operators/connected_components.
+    hash_min_labels) on the merge graph (a CONTRACTED graph, typically
+    tiny and shallow) yields old-label → new-root; one left join applies
+    it to the state.
 
 Per-batch cost: one anti-join against V-sized state, one batch-sized
 relabel join, a fixpoint over the contracted merge graph, one V-sized
@@ -44,6 +45,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.connected_components import hash_min_labels, symmetric_edges
+
 
 def _canon_edges(df: DataFrame) -> DataFrame:
     return (
@@ -53,55 +56,6 @@ def _canon_edges(df: DataFrame) -> DataFrame:
             F.greatest("src", "dst").alias("v"),
         )
         .distinct()
-    )
-
-
-def _min_root_fixpoint(pairs: DataFrame, max_rounds: int = 64) -> DataFrame:
-    """(node, root) for the merge graph given by (a, b) pairs: root = the
-    minimum label reachable. Hash-min with pointer jumping — the input is
-    a CONTRACTED component graph, so rounds are few; raises if the cap is
-    somehow hit rather than returning a half-merged map."""
-    sym = pairs.select(F.col("a").alias("x"), F.col("b").alias("y")).unionAll(
-        pairs.select(F.col("b").alias("x"), F.col("a").alias("y"))
-    )
-    sym = sym.localCheckpoint(eager=False)
-    lab = (
-        sym.select(F.col("x").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("root"))
-    ).localCheckpoint(eager=False)
-    for _ in range(max_rounds):
-        # candidate roots: own, neighbors' roots, and root-of-root
-        # (pointer jumping halves chain depth per round)
-        nbr = (
-            sym.join(lab.withColumnRenamed("node", "y"), "y")
-            .select(F.col("x").alias("node"), "root")
-        )
-        jump = (
-            lab.join(
-                lab.select(
-                    F.col("node").alias("root"), F.col("root").alias("rr")
-                ),
-                "root",
-            )
-            .select("node", F.col("rr").alias("root"))
-        )
-        nxt = (
-            lab.unionAll(nbr)
-            .unionAll(jump)
-            .groupBy("node")
-            .agg(F.min("root").alias("root"))
-        ).localCheckpoint(eager=False)
-        changed = (
-            nxt.join(lab.withColumnRenamed("root", "old"), "node")
-            .filter(F.col("root") != F.col("old"))
-            .count()
-        )
-        lab = nxt
-        if changed == 0:
-            return lab
-    raise RuntimeError(
-        f"merge-graph fixpoint did not converge in {max_rounds} rounds"
     )
 
 
@@ -223,9 +177,20 @@ class StreamingConnectedComponents:
                 self._promote(promoted)
             return 0
         if n_merge_pairs > 0:
-            root_map = _min_root_fixpoint(merges).withColumnRenamed(
-                "node", "label"
+            # label -> root over the merge graph; 2 * n_merge_pairs bounds
+            # both its vertex count and the rounds it can need
+            sym = symmetric_edges(
+                merges.select(F.col("a").alias("src"), F.col("b").alias("dst")),
+                directed=True,
             )
+            nodes = (
+                sym.select(F.col("src").alias("vid")).distinct()
+                .withColumn("component", F.col("vid"))
+            )
+            bound = 2 * n_merge_pairs
+            root_map = hash_min_labels(
+                sym, nodes, bound, max_iterations=bound
+            ).select(F.col("vid").alias("label"), F.col("component").alias("root"))
             labels = (
                 labels.join(root_map, "label", "left")
                 .select(

@@ -94,7 +94,7 @@ ga.n_edges, gb.n_edges
 
 save(ga.edges, "graph_build_edges")
 save(pagerank(ga, tol=0.0, max_iterations=2), "pagerank10")
-save(connected_components(ga, max_iterations=2), "connected_components")
+save(connected_components(ga), "connected_components")
 save(label_propagation(ga, max_iterations=2), "lpa4")
 tri, handles = _triangle_rows_cached(gb)
 save(tri, "triangle_count")

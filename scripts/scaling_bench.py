@@ -363,7 +363,7 @@ spark.sparkContext.setLogLevel("ERROR")
 raw = rmat_graph(spark, scale=%(rmat_scale)d, edge_factor=%(rmat_ef)d, seed=42)
 g = Graph.from_edges(spark, raw.withColumn("weight", F.lit(1.0)))
 edges = g.edges.count()
-connected_components(g, max_iterations=2)  # warmup (JIT)
+connected_components(g)  # warmup (JIT)
 t0 = time.time()
 cc = connected_components(g)
 n_comp = cc.select("component").distinct().count()

@@ -1,7 +1,10 @@
 """Connected components — golden assert from algorithm_test.py:272-285
 plus NetworkX equivalence on algo28."""
 
+import importlib
+
 import networkx as nx
+import pytest
 
 from arkouda_njit_spark import Graph
 from arkouda_njit_spark.operators import component_sizes, connected_components
@@ -17,7 +20,14 @@ def test_cc_golden(spark):
     assert sizes == {0: 7, 7: 3, 10: 3}
 
 
-def test_cc_vs_networkx(spark):
+@pytest.mark.parametrize("regime", ["broadcast", "shuffle"])
+def test_cc_vs_networkx(spark, monkeypatch, regime):
+    if regime == "shuffle":
+        # the jump join's shuffle branch: no graph is above the threshold
+        cc_module = importlib.import_module(
+            "arkouda_njit_spark.operators.connected_components"
+        )
+        monkeypatch.setattr(cc_module, "BROADCAST_MAX_VERTICES", 0)
     graph = Graph.from_edges(spark, ALGO28_SRC, ALGO28_DST)
     nxg = nx_graph(ALGO28_SRC, ALGO28_DST)
     comps = connected_components(graph)
@@ -28,6 +38,14 @@ def test_cc_vs_networkx(spark):
     ours = sorted(tuple(sorted(s)) for s in got.values())
     theirs = sorted(tuple(sorted(c)) for c in nx.connected_components(nxg))
     assert ours == theirs
+
+
+def test_cc_unconverged_in_memory_run_raises(spark):
+    # a 40-vertex path needs more than 2 rounds; half-merged labels are
+    # a wrong answer, so an in-memory run that hits the cap must raise
+    graph = Graph.from_edges(spark, list(range(39)), list(range(1, 40)))
+    with pytest.raises(RuntimeError):
+        connected_components(graph, max_iterations=2)
 
 
 def test_cc_resume(spark, tmp_path):

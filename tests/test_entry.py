@@ -21,6 +21,22 @@ TABLES = [
 ]
 
 
+@pytest.fixture(scope="module", autouse=True)
+def restore_session_conf(spark):
+    """The queries tune the shared session (``_tune``: AQE off, 16 shuffle
+    partitions, UTC); restore it so later test files run under
+    ``get_spark``'s settings whatever ran before them."""
+    keys = (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.shuffle.partitions",
+        "spark.sql.session.timeZone",
+    )
+    saved = {k: spark.conf.get(k) for k in keys}
+    yield
+    for k, v in saved.items():
+        spark.conf.set(k, v)
+
+
 @pytest.fixture(scope="module")
 def ddb():
     con = duckdb.connect()

@@ -56,18 +56,7 @@ def _step_exchanges(df) -> list[tuple[str, list[str]]]:
     return out
 
 
-@pytest.fixture
-def aqe_on(spark):
-    """AQE on for one test: the tests of ``__spark_entry__`` queries leave it
-    off session-wide (``_tune``), and an order-independent plan assertion
-    must not depend on which files ran first."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    yield
-    spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-
-def test_pagerank_iteration_plan_shape(spark, aqe_on):
+def test_pagerank_iteration_plan_shape(spark):
     # _step_exchanges walks an adaptive plan, and the asserted shape is
     # the one get_spark's sessions (AQE on) run
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")

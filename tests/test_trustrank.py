@@ -90,6 +90,21 @@ def test_spam_mass_flags_the_farm(spark):
     assert rows[9]["rank"] > max(rows[v]["rank"] for v in TRUSTED)
 
 
+def test_spam_mass_durable_equals_in_memory(spark, tmp_path):
+    # the PageRank and TrustRank loops must not share epochs: a shared
+    # directory resumed TrustRank from the PageRank vector
+    g, _ = _digraph(spark, WEB)
+    mem = {r["vid"]: r for r in spam_mass(g, TRUSTED).collect()}
+    dur = {
+        r["vid"]: r
+        for r in spam_mass(g, TRUSTED, checkpoint_dir=str(tmp_path)).collect()
+    }
+    assert dur.keys() == mem.keys()
+    for v, r in mem.items():
+        for c in ("rank", "trust", "mass", "rel_mass"):
+            assert dur[v][c] == pytest.approx(r[c], abs=1e-12), (v, c)
+
+
 def test_trustrank_rejects_empty_seed_set(spark):
     g, _ = _digraph(spark, WEB)
     with pytest.raises(ValueError):
